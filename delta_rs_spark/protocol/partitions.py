@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 from typing import Sequence, Union
+from urllib.parse import unquote
 
 from .actions import AddAction
 
@@ -83,3 +84,16 @@ def file_matches(add: AddAction, filters: Sequence[PartitionFilter]) -> bool:
     but robust to non-Hive file layouts.
     """
     return all(f.matches(add.partition_values) for f in filters)
+
+
+def parse_partition_path(part_dir: str) -> dict[str, str | None]:
+    """``year=2020/month=2`` → {"year": "2020", "month": "2"} (URL-decoded;
+    ``__HIVE_DEFAULT_PARTITION__`` → None). Segments without ``=`` are
+    skipped."""
+    values: dict[str, str | None] = {}
+    for seg in part_dir.split("/") if part_dir else ():
+        if "=" not in seg:
+            continue
+        k, v = seg.split("=", 1)
+        values[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
+    return values

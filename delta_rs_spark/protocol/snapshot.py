@@ -10,6 +10,7 @@ small; the resulting file list feeds one Spark parquet scan — the scan itself
 from __future__ import annotations
 
 import json
+from functools import reduce
 from typing import Any, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -27,7 +28,12 @@ from .actions import (
 )
 from . import column_mapping as cm
 from .log import CheckPoint, DeltaLog
-from .partitions import FilterTuple, compile_filters, file_matches
+from .partitions import (
+    FilterTuple,
+    compile_filters,
+    file_matches,
+    parse_partition_path,
+)
 from .schema import partition_value_to_typed, schema_string_to_spark
 from .state import TableState
 from .stats import SkipTuple, prune_files
@@ -285,11 +291,13 @@ class Snapshot:
         """Snapshot → DataFrame.
 
         File-level pruning (partition filters + stats skipping) happens here,
-        *before* plan construction — Spark never lists or opens pruned files.
-        Partition columns are attached from the log's partitionValues (the
-        parquet files do not store them), grouped so each distinct partition
-        tuple is one scan branch; row-level residual filtering is left to
-        Catalyst.
+        *before* plan construction — Spark never lists or opens pruned files,
+        and stats the listed ones on the driver (``session.get_spark``).
+        The selected files become one parquet scan; partition columns come
+        from the Hive directories once each file's directory is checked
+        against its log partitionValues, with a per-partition union only for
+        files outside that layout (``_read_partitioned``). Row-level
+        residual filtering is left to Catalyst.
         """
         adds = self.files(partition_filters=partition_filters, skip_predicates=skip_predicates)
         return self.df_for_adds(spark, adds, columns=columns, with_row_ids=with_row_ids)
@@ -305,12 +313,13 @@ class Snapshot:
         """DataFrame over an explicit subset of this snapshot's files.
 
         Used by to_df (after pruning) and by DML, which reads only the files
-        it must rewrite. Files carrying a deletion vector are anti-joined
-        against their deleted positions (``_metadata.row_index``, evaluated
-        inside the scan — no Python in the hot path); plain files keep the
-        bare-scan plan. ``with_lineage=True`` appends ``_drs_file`` (the
-        add's log path) and ``_drs_pos`` (row index within the file) — the
-        row identity DML and merge-on-read DELETE key on.
+        it must rewrite. Plain files are one scan (``_scan``); files
+        carrying a deletion vector are a second scan, anti-joined against
+        their deleted positions (``_metadata.row_index``, evaluated inside
+        the scan — no Python in the hot path). ``with_lineage=True``
+        appends ``_drs_file`` (the add's log path) and ``_drs_pos`` (row
+        index within the file) — the row identity DML and merge-on-read
+        DELETE key on.
         ``with_row_ids=True`` (row-tracked tables) appends ``_row_id`` /
         ``_row_commit_version``: coalesce(materialized column, add's
         baseRowId + row_index / defaultRowCommitVersion).
@@ -349,10 +358,7 @@ class Snapshot:
                 df = df.drop(self.FILE_LINEAGE_COL, self.POS_LINEAGE_COL)
             parts.append(df)
 
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-
+        df = reduce(DataFrame.unionByName, parts)
         if with_row_ids:
             df = self._attach_row_ids(spark, df, adds, mat_id, mat_cv)
 
@@ -368,7 +374,7 @@ class Snapshot:
 
     # above this many files the per-file (baseRowId, commitVersion) lookup
     # switches from a literal map to a broadcast join — a 100k-entry literal
-    # map would bloat the plan the same way the union-branch cap does
+    # map would bloat the plan and stall analysis
     ROW_ID_MAP_MAX_FILES = 1000
 
     def _attach_row_ids(
@@ -465,18 +471,6 @@ class Snapshot:
             return "file:" + uri
         return uri
 
-    @staticmethod
-    def _with_mat_fields(schema: T.StructType, mat_cols: Sequence[str]) -> T.StructType:
-        """Extend a read schema with the row-tracking materialized columns
-        (nullable longs): files written before a rewrite don't have them and
-        read NULL through the explicit schema — exactly what coalesce needs."""
-        extra = [
-            T.StructField(c, T.LongType(), True)
-            for c in mat_cols
-            if c not in schema.names
-        ]
-        return T.StructType(list(schema.fields) + extra) if extra else schema
-
     def _scan(
         self,
         spark: SparkSession,
@@ -484,33 +478,42 @@ class Snapshot:
         include_lineage: bool,
         mat_cols: Sequence[str] = (),
     ) -> DataFrame:
-        table_schema = self.schema()
-        pcols = self.metadata.partition_columns
-        if not pcols:
-            if self.mapping_mode() != "none":
-                # data files carry PHYSICAL column names: scan physically,
-                # rename logical via positional struct casts (pure codegen);
-                # materialized row-id columns are physical by definition
-                scan_schema = self._with_mat_fields(
-                    cm.physical_schema(table_schema), mat_cols
-                )
-                df = spark.read.schema(scan_schema).parquet(
-                    *[self._readable(a.path) for a in adds]
-                )
-                sel = cm.to_logical_exprs(table_schema) + [F.col(c) for c in mat_cols]
-                if include_lineage:
-                    return df.select(*sel, *self._lineage_exprs())
-                return df.select(*sel)
-            df = spark.read.schema(
-                self._with_mat_fields(table_schema, mat_cols)
-            ).parquet(*[self._readable(a.path) for a in adds])
-            cols = list(table_schema.names) + list(mat_cols)
-            if include_lineage:
-                return df.select(*cols, *self._lineage_exprs())
-            return df.select(*cols)
-        return self._read_partitioned(
-            spark, adds, include_lineage=include_lineage, mat_cols=mat_cols
+        if self.metadata.partition_columns:
+            return self._read_partitioned(spark, adds, include_lineage, mat_cols)
+        uris = [self._readable(a.path) for a in adds]
+        return self._parquet_scan(spark, uris, self.schema(), include_lineage, mat_cols)
+
+    def _parquet_scan(
+        self,
+        spark: SparkSession,
+        uris: list[str],
+        schema: T.StructType,
+        include_lineage: bool,
+        mat_cols: Sequence[str],
+        base_path: bool = False,
+    ) -> DataFrame:
+        """The scan builder every read shares: one ``spark.read.parquet``
+        over exactly these readable URIs with an explicit schema (no inference
+        job), logical columns + ``mat_cols`` (+ lineage) out. With column
+        mapping the files carry PHYSICAL names: scan physically, rename to
+        logical via positional struct casts (pure codegen); materialized
+        row-id columns are physical by definition. ``base_path`` makes
+        Spark derive the partition columns from the Hive directories."""
+        mapped = self.mapping_mode() != "none"
+        scan_schema = cm.physical_schema(schema) if mapped else schema
+        # row-tracking materialized columns: files written before a rewrite
+        # lack them and read NULL — exactly what the row-id coalesce needs
+        extra = [c for c in mat_cols if c not in scan_schema.names]
+        reader = spark.read.schema(
+            T.StructType(scan_schema.fields + [T.StructField(c, T.LongType()) for c in extra])
         )
+        if base_path:
+            reader = reader.option("basePath", self.log.data_plane.scan_root)
+        df = reader.parquet(*uris)
+        cols = cm.to_logical_exprs(schema) if mapped else list(schema.names)
+        # lineage reads _metadata.*, so it must be selected on the scan itself
+        lineage = self._lineage_exprs() if include_lineage else []
+        return df.select(*cols, *mat_cols, *lineage)
 
     def _anti_join_deleted_positions(
         self, spark: SparkSession, df: DataFrame, dv_adds: list[AddAction]
@@ -537,11 +540,6 @@ class Snapshot:
         )
         return df.join(pos, cond, "left_anti")
 
-    # above this many distinct partition tuples, a lit()-union plan becomes a
-    # liability (a 10k-branch union stalls analysis); switch to one basePath
-    # scan where Spark derives partition columns from the Hive paths
-    MAX_UNION_BRANCHES = 64
-
     def _read_partitioned(
         self,
         spark: SparkSession,
@@ -549,72 +547,71 @@ class Snapshot:
         include_lineage: bool = False,
         mat_cols: Sequence[str] = (),
     ) -> DataFrame:
-        """Attach partition columns from the log's partitionValues.
+        """Partitioned read: ONE parquet scan with ``basePath`` = the scan
+        root for every file in the Hive layout, so Spark derives the
+        partition columns (typed by our schema) and later filters on them
+        prune as ``PartitionFilters``.
 
-        Small group count (the common case after pruning): one union branch
-        per distinct partition tuple with typed ``lit()`` columns — exact,
-        no path parsing, works even for non-Hive layouts. Large group count
-        (full scan of a heavily partitioned table): a single
-        ``basePath`` scan over exactly the log's file list — one scan node,
-        no plan explosion; Spark types the partition columns from our
-        schema. Only the listed files are read either way — basePath only
-        controls partition-column derivation, not file discovery.
+        A file is in the Hive layout when its readable URI lies under the
+        scan root and its directory there is exactly the partition columns
+        in table order, each ``key=value`` parsing back to the log's
+        partitionValues (physical names under column mapping, NULL as
+        ``__HIVE_DEFAULT_PARTITION__``) — so the derived values are the
+        log's. The rest (foreign non-Hive layouts, a shallow clone's
+        absolute source paths, a non-NULL empty string, which Spark
+        rejects as ``k=``) fall back to one scan branch per distinct
+        partition tuple with typed ``lit()`` columns from partitionValues,
+        joined by ``unionByName``: exact for any layout, but each branch
+        costs driver planning time.
         """
         schema = self.schema()
-        data_schema = self.data_schema()
         pcols = self.metadata.partition_columns
         ptypes = {f.name: f.dataType for f in schema.fields if f.name in pcols}
-        lineage = self._lineage_exprs() if include_lineage else []
-
-        mapped = self.mapping_mode() != "none"
         # with column mapping, partitionValues keys AND the Hive path dirs
         # use physical names; the emitted DataFrame stays logical
+        mapped = self.mapping_mode() != "none"
         phys = cm.top_level_physical(schema) if mapped else {c: c for c in schema.names}
+        keys = [phys[c] for c in pcols]
+        root = self.log.data_plane.scan_root.rstrip("/") + "/"
 
+        hive: list[str] = []
         groups: dict[tuple, list[str]] = {}
         for a in adds:
-            key = tuple(a.partition_values.get(phys[c]) for c in pcols)
-            groups.setdefault(key, []).append(self._readable(a.path))
+            uri = self._readable(a.path)
+            rel_dir = uri[len(root):].rpartition("/")[0]
+            parsed = parse_partition_path(rel_dir)
+            if (
+                uri.startswith(root)
+                and list(parsed) == keys
+                and len(rel_dir.split("/")) == len(keys)
+                and parsed == a.partition_values
+                and "" not in parsed.values()
+            ):
+                hive.append(uri)
+            else:
+                key = tuple(a.partition_values.get(k) for k in keys)
+                groups.setdefault(key, []).append(uri)
 
-        if len(groups) > self.MAX_UNION_BRANCHES and not mat_cols:
-            all_paths = [p for paths in groups.values() for p in paths]
-            # basePath derivation requires the Hive key=value layout; fall
-            # back to unions if any file's path doesn't encode it
-            if all(f"/{phys[c]}=" in p for p in all_paths for c in pcols):
-                scan_schema = cm.physical_schema(schema) if mapped else schema
-                df = (
-                    spark.read.schema(scan_schema)
-                    .option("basePath", self.log.data_plane.scan_root)
-                    .parquet(*all_paths)
+        parts = []
+        if hive:
+            parts.append(
+                self._parquet_scan(
+                    spark, hive, schema, include_lineage, mat_cols, base_path=True
                 )
-                if mapped:
-                    df = df.select(*cm.to_logical_exprs(schema), *lineage)
-                    return df
-                return df.select(*schema.names, *lineage) if lineage else df
-
-        scan_data_schema = self._with_mat_fields(
-            cm.physical_schema(data_schema) if mapped else data_schema, mat_cols
-        )
-        data_sel = (
-            cm.to_logical_exprs(data_schema) if mapped else list(data_schema.names)
-        ) + [F.col(c) for c in mat_cols]
+            )
         lineage_names = (
             [self.FILE_LINEAGE_COL, self.POS_LINEAGE_COL] if include_lineage else []
         )
-        branches = []
-        for key, paths in groups.items():
-            branch = spark.read.schema(scan_data_schema).parquet(*paths)
-            # lineage exprs read _metadata.* so they must be applied directly
-            # on the scan; later selects reference them by alias only
-            branch = branch.select(*data_sel, *lineage)
+        data_schema = self.data_schema()
+        for key, group in groups.items():
+            branch = self._parquet_scan(
+                spark, group, data_schema, include_lineage, mat_cols
+            )
             for cname, sval in zip(pcols, key):
                 typed = partition_value_to_typed(sval, ptypes[cname])
                 branch = branch.withColumn(cname, F.lit(typed).cast(ptypes[cname]))
-            branches.append(branch.select(*schema.names, *mat_cols, *lineage_names))
-        df = branches[0]
-        for b in branches[1:]:
-            df = df.unionByName(b)
-        return df
+            parts.append(branch.select(*schema.names, *mat_cols, *lineage_names))
+        return reduce(DataFrame.unionByName, parts)
 
     # ---- misc ------------------------------------------------------------
     def min_reader_version(self) -> int:

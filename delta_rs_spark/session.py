@@ -48,6 +48,11 @@ def get_spark(app_name: str = "delta_rs_spark", extra_conf: dict | None = None) 
         # surface as long; sources/tables.py converts to µs timestamps
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # stat explicit file lists on the driver, never in a listing job:
+        # the master is always local[N], so Spark's "distributed" listing
+        # only re-stats files the Delta log already lists, on these same
+        # cores, at the cost of one job plus one task per file
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")

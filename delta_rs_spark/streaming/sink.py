@@ -53,13 +53,26 @@ class ExactlyOnceDeltaSink:
     def _refresh_table(self):
         """Cached handle: full log replay on first use, incremental apply
         of new commits afterwards. Raises NotATableError until the table
-        exists (first batch creates it)."""
+        exists (first batch creates it).
+
+        A handle that cannot advance — ``update()`` fails, or the log no
+        longer holds the handle's own commit (the table was deleted, or
+        recreated with fewer commits, under the stream) — is dropped for a
+        fresh load, so a recreated table gets the same NotATableError
+        recovery as a new one; the fresh load reports any real error."""
+        from ..protocol.snapshot import DeltaTableError
         from ..table import DeltaTable
 
-        if self._table is None:
-            self._table = DeltaTable(self.table_uri)
-        else:
-            self._table.update()
+        t = self._table
+        if t is not None:
+            try:
+                t.update()
+                if t.log.backend.exists(t.log.commit_path(t.version)):
+                    return t
+            except (DeltaTableError, OSError, ValueError):
+                pass  # the fresh load below re-raises what is not a recreate
+            self._table = None
+        self._table = DeltaTable(self.table_uri)
         return self._table
 
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
@@ -168,7 +181,6 @@ class UpsertDeltaSink:
         from ..dml import merge
         from ..protocol.actions import TxnAction
         from ..protocol.snapshot import NotATableError
-        from ..table import DeltaTable
         from ..writer import write_deltalake
 
         spark = (

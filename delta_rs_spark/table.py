@@ -249,27 +249,16 @@ class DeltaTable:
         partitions: Sequence[FilterTuple] | None = None,
         columns: Sequence[str] | None = None,
     ):
+        """Driver-side read, no Spark: per file, drop the positions its
+        deletion vector marks (row order == row_index for a full-file read)
+        and attach the partition columns from the log's partitionValues —
+        never from the directory names, so any file layout reads right."""
         if self._snapshot.mapping_mode() != "none":
             raise ValueError(
                 "column-mapped tables store physical column names in the "
                 "data files; read via to_df() (Spark path, mapping-aware)"
             )
-        dv_adds = [a for a in self._snapshot.state.files.values() if a.deletion_vector]
-        if not dv_adds:
-            return self.to_pyarrow_dataset(partitions).to_table(
-                columns=list(columns) if columns else None
-            )
-        return self._pyarrow_table_with_dvs(partitions, columns)
-
-    def _pyarrow_table_with_dvs(
-        self,
-        partitions: Sequence[FilterTuple] | None,
-        columns: Sequence[str] | None,
-    ):
-        """Driver-side DV-aware read: per file, drop the positions its
-        deletion vector marks (row order == row_index for a full-file read)."""
         import pyarrow as pa
-        import pyarrow.dataset as ds
         import pyarrow.parquet as pq
 
         from .protocol.schema import partition_value_to_pyarrow
@@ -281,6 +270,7 @@ class DeltaTable:
         pieces = []
         for a in adds:
             tbl = pq.read_table(snap._local(a.path))
+            tbl = tbl.drop_columns([c for c in pcols if c in tbl.column_names])
             if a.deletion_vector:
                 from .protocol.dv import add_positions
 
@@ -295,8 +285,7 @@ class DeltaTable:
                     field, pa.array([val] * tbl.num_rows, type=field.type)
                 )
             # files written before an add_columns evolution lack the new
-            # columns — NULL-fill them (the dataset path does this via its
-            # explicit schema; the DV path selects per file and must too)
+            # columns — NULL-fill them
             for name in full_schema.names:
                 if name not in tbl.column_names:
                     field = full_schema.field(name)

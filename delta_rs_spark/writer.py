@@ -38,6 +38,7 @@ from .protocol.actions import (
 )
 from .protocol import column_mapping as cm
 from .protocol.log import DeltaLog
+from .protocol.partitions import parse_partition_path
 from .protocol.schema import schema_string_to_spark, spark_to_schema_string
 from .table import DeltaTable
 from .transactions import DeltaTransaction
@@ -1033,7 +1034,7 @@ def _promote_staged_files(
         i, src = item
         rel = _rel_inside(src, staging_dir)
         part_dir = os.path.dirname(rel)
-        partition_values = _parse_partition_path(part_dir)
+        partition_values = parse_partition_path(part_dir)
         fname = f"part-{i:05d}-{uuid.uuid4()}-c000.snappy.parquet"
         final_rel = (os.path.join(part_dir, fname) if part_dir else fname).replace(
             os.sep, "/"
@@ -1079,19 +1080,6 @@ def _remove_dir_tree(root: str) -> None:
     import shutil
 
     shutil.rmtree(root, ignore_errors=True)
-
-
-def _parse_partition_path(part_dir: str) -> dict[str, Optional[str]]:
-    """``year=2020/month=2`` → {"year": "2020", "month": "2"} (URL-decoded)."""
-    values: dict[str, Optional[str]] = {}
-    if not part_dir:
-        return values
-    for seg in part_dir.split(os.sep):
-        if "=" not in seg:
-            continue
-        k, v = seg.split("=", 1)
-        values[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
-    return values
 
 
 # ---- footer stats (metadata-only, distributed) ------------------------------
@@ -1474,7 +1462,7 @@ def convert_to_delta(
             AddAction(
                 path=rel.replace(os.sep, "/"),
                 size=st.st_size,
-                partition_values=_parse_partition_path(os.path.dirname(rel)),
+                partition_values=parse_partition_path(os.path.dirname(rel)),
                 modification_time=int(st.st_mtime * 1000),
                 data_change=True,
                 stats=stats_by_path.get(f),

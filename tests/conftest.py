@@ -36,3 +36,16 @@ def sf_dir() -> str:
     if not os.path.isdir(TESTDATA_SF):
         pytest.skip("testdata not available")
     return TESTDATA_SF
+
+
+@pytest.fixture()
+def engine_log_table(spark, tmp_path) -> str:
+    """Path of a table the engine writes itself — versions 0-4, with add
+    and remove actions (an overwrite at v3) — for log-replay tests that
+    must not depend on external fixture data."""
+    from delta_rs_spark.writer import write_deltalake
+
+    uri = str(tmp_path / "engine_log_table")
+    for i, mode in enumerate(["append", "append", "append", "overwrite", "append"]):
+        write_deltalake(spark, spark.range(10 * i, 10 * i + 5), uri, mode=mode)
+    return uri

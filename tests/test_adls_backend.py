@@ -7,9 +7,9 @@ adds writes the reference leaves unimplemented (``azure.rs:199-209``) using
 Azure's native ``If-None-Match: *`` conditional PUT as the atomic commit
 point — the same lock-free design as the S3 backend. The fake transport pins
 the REST wire contract (URLs, conditional headers, status mapping, list XML
-+ marker pagination), and a golden-table test replays one of the reference's
-own fixture logs through ``abfss://`` end to end (log layer — matching the
-reference backend's read-only scope).
++ marker pagination), and a replay test serves a log the engine wrote
+itself through ``abfss://`` end to end (log layer — matching the reference
+backend's read-only scope).
 """
 
 from __future__ import annotations
@@ -210,19 +210,16 @@ def test_exists_on_directory_prefix(adls):
     assert backend.exists(f"{URI}/_delta_log")
 
 
-GOLDEN = "/root/reference/rust/tests/data/simple_table"
-
-
-def test_golden_log_replay_through_abfss(adls):
-    """The reference's own simple_table log, served over the mocked ADLS
-    backend: version, active file set, and protocol must match the local
-    golden read (the reference Azure backend is read-only — this is its
-    whole scope)."""
+def test_engine_log_replay_through_abfss(adls, engine_log_table):
+    """A log the engine wrote itself (v0-4, adds and removes), served over
+    the mocked ADLS backend: version, active file set, and protocol
+    must match the local read — log replay end to end through ``abfss://``."""
     backend, fake = adls
-    for dirpath, _dirs, files in os.walk(os.path.join(GOLDEN, "_delta_log")):
+    src = engine_log_table
+    for dirpath, _dirs, files in os.walk(os.path.join(src, "_delta_log")):
         for fname in files:
             full = os.path.join(dirpath, fname)
-            rel = os.path.relpath(full, GOLDEN).replace(os.sep, "/")
+            rel = os.path.relpath(full, src).replace(os.sep, "/")
             with open(full, "rb") as fh:
                 fake.blobs[f"fs/tables/t1/{rel}"] = fh.read()
 
@@ -231,7 +228,7 @@ def test_golden_log_replay_through_abfss(adls):
         from delta_rs_spark.table import DeltaTable
 
         t = DeltaTable.for_path(URI)
-        local = DeltaTable.for_path(GOLDEN)
+        local = DeltaTable.for_path(src)
         assert t.version == local.version == 4
         assert sorted(a.path for a in t.add_actions()) == sorted(
             a.path for a in local.add_actions()

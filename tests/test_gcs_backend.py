@@ -6,8 +6,8 @@ other object stores (head/get/list with 404→NotFound), same lock-free
 atomic commit via GCS's native ``ifGenerationMatch=0`` conditional upload
 (HTTP 412 on conflict). The fake transport pins the JSON-API wire contract
 (object-as-one-path-segment encoding, alt=media, pageToken pagination,
-precondition status mapping); a golden-table test replays one of the
-reference's own fixture logs through ``gs://`` end to end, and a lifecycle
+precondition status mapping); a replay test serves a log the engine
+wrote itself through ``gs://`` end to end, and a lifecycle
 test runs write → merge-on-read DELETE → read-back over the mirrored data
 plane.
 """
@@ -199,18 +199,16 @@ def test_parse_table_uri_gs_scheme(monkeypatch):
     assert isinstance(backend, GcsBackend)
 
 
-GOLDEN = "/root/reference/rust/tests/data/simple_table"
-
-
-def test_golden_log_replay_through_gs(gcs):
-    """The reference's own simple_table log served over the mocked GCS
-    backend: version, active file set, and protocol must match the local
-    golden read."""
+def test_engine_log_replay_through_gs(gcs, engine_log_table):
+    """A log the engine wrote itself (v0-4, adds and removes), served over
+    the mocked GCS backend: version, active file set, and protocol
+    must match the local read — log replay end to end through ``gs://``."""
     backend, fake = gcs
-    for dirpath, _dirs, files in os.walk(os.path.join(GOLDEN, "_delta_log")):
+    src = engine_log_table
+    for dirpath, _dirs, files in os.walk(os.path.join(src, "_delta_log")):
         for fname in files:
             full = os.path.join(dirpath, fname)
-            rel = os.path.relpath(full, GOLDEN).replace(os.sep, "/")
+            rel = os.path.relpath(full, src).replace(os.sep, "/")
             with open(full, "rb") as fh:
                 fake.objects[f"bkt/tables/t1/{rel}"] = fh.read()
 
@@ -219,8 +217,8 @@ def test_golden_log_replay_through_gs(gcs):
         from delta_rs_spark.table import DeltaTable
 
         t = DeltaTable(URI)
-        local = DeltaTable(GOLDEN)
-        assert t.version == local.version
+        local = DeltaTable(src)
+        assert t.version == local.version == 4
         assert sorted(t.files()) == sorted(local.files())
         assert t.protocol_versions() == local.protocol_versions()
     finally:

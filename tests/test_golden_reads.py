@@ -202,7 +202,7 @@ def test_incremental_update_enforces_reader_gate(spark, tmp_path):
         t.update()
 
 
-def test_simple_commit_two_commits_reference_parity(spark, tmp_path):
+def test_simple_commit_two_commits_reference_parity(spark, tmp_path, golden):
     """Mirror of the reference's commit suite over its own fixture
     (rust/tests/simple_commit_test.rs::test_two_commits,
     ::test_commit_version_fails_if_version_exists): the pre-staged
@@ -217,7 +217,7 @@ def test_simple_commit_two_commits_reference_parity(spark, tmp_path):
     from delta_rs_spark.protocol.log import FileAlreadyExistsError
     from delta_rs_spark.transactions import DeltaTransaction
 
-    src = "/root/reference/rust/tests/data/simple_commit"
+    src = golden("simple_commit")
     uri = str(tmp_path / "simple_commit")
     shutil.copytree(src, uri)
 
@@ -274,7 +274,7 @@ def test_simple_commit_two_commits_reference_parity(spark, tmp_path):
     assert vals == [1, 1, 2, 2, 3, 3]
 
 
-def test_concurrent_workers_reference_parity(tmp_path):
+def test_concurrent_workers_reference_parity(tmp_path, golden):
     """Mirror of rust/tests/concurrent_writes_test.rs::concurrent_writes_fs
     over the reference's own concurrent_workers fixture: 5 workers x 3
     commits race through the optimistic retry loop; versions 1..15 come out
@@ -285,7 +285,7 @@ def test_concurrent_workers_reference_parity(tmp_path):
     from delta_rs_spark.protocol.actions import AddAction
     from delta_rs_spark.transactions import DeltaTransaction
 
-    src = "/root/reference/rust/tests/data/concurrent_workers"
+    src = golden("concurrent_workers")
     uri = str(tmp_path / "concurrent_workers")
     shutil.copytree(src, uri)
     assert DeltaTable(uri).version == 0

@@ -1246,3 +1246,36 @@ def test_sink_cached_handle_sees_external_commits(spark, tmp_path):
     # the cached handle converged to the same version a fresh load sees
     sink._table.update()
     assert sink._table.version == t.version
+
+
+@pytest.mark.parametrize("kind", ["append", "upsert"])
+def test_sink_recovers_when_table_recreated_between_batches(spark, tmp_path, kind):
+    """A table deleted (and recreated, or not) between micro-batches: the
+    cached handle cannot advance, so the sink drops it and reloads — the
+    next batch lands in the recreated table, or creates a new one, instead
+    of reading the old table's vanished files."""
+    import shutil
+
+    from delta_rs_spark.streaming.sink import UpsertDeltaSink
+
+    uri = str(tmp_path / f"recreated_{kind}")
+    if kind == "append":
+        sink = ExactlyOnceDeltaSink(uri, app_id="q")
+    else:
+        sink = UpsertDeltaSink(uri, "t.id = s.id", app_id="q")
+    for epoch in range(3):
+        sink(spark.range(4 * epoch, 4 * epoch + 4), epoch)
+    assert sink._table is not None
+
+    shutil.rmtree(uri)
+    write_deltalake(spark, spark.range(100, 103), uri)
+    sink(spark.range(12, 16), 3)
+    t = DeltaTable(uri)
+    assert sorted(r.id for r in t.to_df(spark).collect()) == [12, 13, 14, 15, 100, 101, 102]
+    assert t.get_app_transaction_version("q") == 3
+
+    shutil.rmtree(uri)
+    sink(spark.range(16, 20), 4)
+    t = DeltaTable(uri)
+    assert t.version == 0
+    assert sorted(r.id for r in t.to_df(spark).collect()) == [16, 17, 18, 19]

@@ -128,11 +128,9 @@ def test_null_partition_values(spark, tmp_path):
 
 
 def test_many_partition_read_uses_basepath(spark, tmp_path):
-    """A table with more distinct partitions than MAX_UNION_BRANCHES reads
-    through the single basePath scan and returns identical data to the
-    union path."""
-    from delta_rs_spark.protocol.snapshot import Snapshot
-
+    """A 100-partition table reads through ONE basePath scan and returns
+    the same rows as the driver-only to_pyarrow_table(), which attaches
+    partition values from the log rather than from directory names."""
     df = spark.range(200).select(
         F.col("id"), (F.col("id") % 100).alias("bucket"), (F.col("id") * 2.0).alias("v")
     )
@@ -143,22 +141,17 @@ def test_many_partition_read_uses_basepath(spark, tmp_path):
     assert len({a.partition_values["bucket"] for a in t.add_actions()}) == 100
 
     fast = t.to_df(spark)
-    assert fast.count() == 200
     assert dict(fast.dtypes)["bucket"] == "bigint"
     # plan is ONE scan, not a 100-branch union
     plan = fast._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Scan parquet") == 1
 
-    # force the union path and compare values exactly
-    orig = Snapshot.MAX_UNION_BRANCHES
-    Snapshot.MAX_UNION_BRANCHES = 10_000
-    try:
-        slow = DeltaTable(uri).to_df(spark)
-        assert sorted(map(tuple, fast.collect())) == sorted(map(tuple, slow.collect()))
-    finally:
-        Snapshot.MAX_UNION_BRANCHES = orig
+    ref = t.to_pyarrow_table().to_pylist()
+    assert sorted(map(tuple, fast.select("id", "bucket", "v").collect())) == sorted(
+        (r["id"], r["bucket"], r["v"]) for r in ref
+    )
 
-    # partition pruning still happens before the plan: one partition -> union path
+    # partition pruning still happens before the plan
     one = t.to_df(spark, partition_filters=[("bucket", "=", "7")])
     assert one.count() == 2
 
