@@ -1,30 +1,43 @@
-"""Copy-on-write DML: DELETE / UPDATE / MERGE over Delta tables.
+"""DML: DELETE / UPDATE / MERGE over Delta tables.
 
 The reference (delta-rs v0) lists MERGE/UPDATE/DELETE as explicit gaps and
 only sketches update semantics in a test (``rust/tests/write_exploration.rs:
 433-444``: a second commit with add+remove pairs). This module implements the
 full commands the Delta protocol expresses with exactly those primitives —
 every DML statement is one transactional commit of Remove(old file) +
-Add(rewritten file) actions, so readers at any version see an atomic change
-and time travel keeps working.
+Add(new file) actions, so readers at any version see an atomic change and
+time travel keeps working.
 
 Spark-first, scale-first design:
 
 1. **Prune before reading.** Candidate files come from the snapshot after
    partition-filter and stats (min/max) pruning against the predicate's
    simple conjuncts — at 100 TB a ``DELETE WHERE ds = '2024-01-01'`` touches
-   one partition's files, never the lake.
-2. **Touch only files that MUST change.** A distributed pass over the pruned
-   candidates finds the files that actually contain matching rows
-   (``input_file_name()`` group-by — map-side partial agg, tiny shuffle of
-   one row per file). Files without matches keep their Add entries untouched:
-   no rewrite, no tombstone, no data movement.
-3. **Rewrite distributed.** Surviving/updated rows of only those files are
-   written by Spark executors through the same staged-write path as append
-   (footer stats, unique names); the driver commits the swap.
+   one partition's files, never the lake. A DELETE whose predicate pins
+   whole partitions tombstones their files without reading them.
+2. **Touch only files that MUST change.** One distributed pass over the
+   pruned candidates finds the rows that match; files without matches keep
+   their Add entries untouched: no rewrite, no tombstone, no data movement.
+3. **Two ways to retire the matched rows**, chosen per statement:
 
-All operations record Delta-style commitInfo (operation, predicate,
-operationMetrics) so ``table.history()`` reads like a real Delta log.
+   - *copy-on-write* (the default): the surviving and updated rows of the
+     touched files are rewritten into new files, which replace them.
+   - *merge-on-read*: with table property
+     ``delta.enableDeletionVectors=true``, and when every candidate add has
+     a log-relative path (the scan's row lineage resolves only those), the
+     matched rows' positions become deletion vectors on their files and
+     only the updated and inserted rows are written. When more than
+     ``DV_MAX_POSITIONS`` rows would be deleted the statement takes
+     copy-on-write instead.
+
+Each verb builds only its rows (predicate, joins, assignments, the MERGE
+multi-match guard). Both ways then share one core: ``_stage_rows`` writes
+new rows through the staged-write path (constraints, footer stats, column
+mapping, UniForm field ids, partition layout) and ``_commit`` is the one
+transaction — read set, identity water marks, change-data files, the
+deletion-vector protocol bump, Remove + Add actions and Delta-style
+commitInfo (operation, predicate, operationMetrics), so ``table.history()``
+reads like a real Delta log.
 
 Concurrency semantics are v0-faithful: commits go through the blind
 optimistic-retry loop with NO semantic conflict checking (the reference
@@ -38,7 +51,8 @@ from __future__ import annotations
 
 import re
 import time
-from typing import Any, Optional, Sequence
+from functools import reduce
+from typing import Any, Callable, Optional, Sequence
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -305,30 +319,45 @@ def _identity_commit_extras(table, assigned: dict, adds: list):
     return new_meta, guard
 
 
-def _stage_and_swap(
+def _no_change(table: DeltaTable, *counts: str) -> dict[str, Any]:
+    """The result of a statement that matched nothing: no commit, the
+    table's current version, no files and zero ``counts``."""
+    return {
+        "version": table.version,
+        "numRemovedFiles": 0,
+        "numAddedFiles": 0,
+        **dict.fromkeys(counts, 0),
+    }
+
+
+def _union(parts: list[DataFrame], **kw) -> Optional[DataFrame]:
+    return reduce(lambda a, b: a.unionByName(b, **kw), parts) if parts else None
+
+
+def _positions(df: DataFrame, file_col: str, pos_col: str) -> DataFrame:
+    """(path, row_index) of each row, from the scan's lineage columns."""
+    return df.select(F.col(file_col).alias("path"), F.col(pos_col).alias("row_index"))
+
+
+# ---------------------------------------------------------------------------
+# the shared commit core: staging, the one transaction, the two swap shapes
+# ---------------------------------------------------------------------------
+
+def _stage_rows(
     spark: SparkSession,
     table: DeltaTable,
-    new_rows: DataFrame,
-    removed: list[AddAction],
-    operation: str,
-    params: dict[str, Any],
-    extra_metrics: dict[str, Any],
-    change_rows: Optional[DataFrame] = None,
-    extra_actions: Optional[list] = None,
+    rows: DataFrame,
+    schema=None,
     max_records_per_file: Optional[int] = None,
-    identity_assigned: Optional[dict] = None,
-    reads: Optional[dict[str, Any]] = None,
-    schema_override=None,
-) -> dict[str, Any]:
-    """Write ``new_rows`` through the staged-write path and commit
-    Remove(removed) + Add(staged) (+ cdc change files, when given) as one
-    version. ``schema_override`` is the POST-commit table schema when the
-    same commit evolves it (MERGE schema evolution) — the physical rename
-    for column-mapped tables must use the evolved mapping or the evolved
-    columns' data would be written under unmapped names and read back
-    NULL."""
-    import uuid as _uuid
+) -> list[AddAction]:
+    """Write ``rows`` through the staged-write path and return their Add
+    actions: CHECK constraints, per-file footer stats, the column-mapping
+    physical rename, UniForm field ids and the partition layout.
 
+    ``schema`` is the POST-commit table schema when the same commit evolves
+    it (MERGE schema evolution) — the physical rename for column-mapped
+    tables must use the evolved mapping or the evolved columns' data would
+    be written under unmapped names and read back NULL."""
     from .writer import _promote_staged_files, check_constraints, data_skipping_columns
 
     from .protocol import column_mapping as cm
@@ -336,58 +365,103 @@ def _stage_and_swap(
 
     log = table.log
     pcols = table.metadata().partition_columns
-    schema = schema_override if schema_override is not None else table.schema()
+    schema = schema if schema is not None else table.schema()
     cfg = table.metadata().configuration
     # CHECK constraints apply to the rewritten content (UPDATE/MERGE can
     # introduce violations; DELETE survivors pass trivially)
-    check_constraints(new_rows, cfg, schema=schema)
+    check_constraints(rows, cfg, schema=schema)
 
     # column-mapped tables store PHYSICAL names in data files, partition
     # dirs, and stats; the frame stays logical until this last hop
-    stage_rows, stage_pcols = new_rows, pcols
     stats_cols = data_skipping_columns(cfg, schema.names)
     _idn = set(_idc.specs(schema))
     if _idn and stats_cols is not None:
         # identity water marks read the columns' footer min/max
         stats_cols = stats_cols | _idn
     if cm.is_mapped(cfg):
-        stage_rows = cm.to_physical_df(new_rows, schema)
+        rows = cm.to_physical_df(rows, schema)
         phys = cm.top_level_physical(schema)
-        stage_pcols = [phys[c] for c in pcols]
+        pcols = [phys[c] for c in pcols]
         if stats_cols is not None:
             stats_cols = {phys.get(c, c) for c in stats_cols}
 
     if table._uniform_enabled() and not cm.is_mapped(cfg):
         from .uniform.iceberg import attach_parquet_field_ids
 
-        stage_rows = attach_parquet_field_ids(stage_rows, schema)
+        rows = attach_parquet_field_ids(rows, schema)
     staging_dir = log.data_plane.stage_dir("commit")
-    writer = stage_rows.write.mode("overwrite")
-    if stage_pcols:
-        writer = writer.partitionBy(*stage_pcols)
+    writer = rows.write.mode("overwrite")
+    if pcols:
+        writer = writer.partitionBy(*pcols)
     if max_records_per_file:
         writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
     writer.parquet(staging_dir)
-    adds = _promote_staged_files(
-        spark,
-        log,
-        staging_dir,
-        stage_pcols,
-        stats_columns=stats_cols,
+    return _promote_staged_files(
+        spark, log, staging_dir, pcols, stats_columns=stats_cols
     )
 
+
+def _commit(
+    table: DeltaTable,
+    operation: str,
+    params: dict[str, Any],
+    metrics: dict[str, Any],
+    removed: Sequence[AddAction] = (),
+    adds: Sequence[AddAction] = (),
+    change_rows: Optional[DataFrame] = None,
+    extra_actions: Optional[list] = None,
+    identity_assigned: Optional[dict] = None,
+    reads: Optional[dict[str, Any]] = None,
+    schema=None,
+) -> dict[str, Any]:
+    """Commit one DML statement as one version: Remove(``removed``) +
+    ``adds`` (staged files and deletion-vector re-adds), the change files
+    of ``change_rows``, ``extra_actions``, the water marks of the identity
+    columns the staged rows were ``identity_assigned``, and commitInfo
+    carrying ``metrics``. Every DELETE, UPDATE, MERGE and replaceWhere
+    commit goes through here, whichever way it rewrote the rows.
+
+    Returns the statement's result: the new version and ``metrics``, with
+    digit strings as ints."""
     cdc_actions: list = []
     if change_rows is not None:
         from .cdf import write_change_files
 
         cdc_actions = write_change_files(
-            spark, log, change_rows, table_schema=schema, configuration=cfg
+            change_rows.sparkSession,
+            table.log,
+            change_rows,
+            table_schema=schema if schema is not None else table.schema(),
+            configuration=table.metadata().configuration,
         )
 
-    now_ms = int(time.time() * 1000)
     txn = DeltaTransaction(table)
     if reads:
         txn.record_reads(**reads)
+    if any(a.deletion_vector for a in adds):
+        from .protocol.actions import upgraded_protocol
+
+        # deletion vectors are a reader-visible feature: bump to reader 3 /
+        # writer 7 on first use so foreign readers fail fast.
+        # readerFeatures/writerFeatures are mandatory at 3/7 per the public
+        # Delta spec. The bump only ever fires on a table's FIRST DV commit,
+        # and every descriptor this engine writes is the spec RoaringBitmap
+        # format (protocol/dv.py) — so the spec's own feature token is
+        # correct and the table is foreign-readable. (Tables bumped by
+        # pre-round-3 builds carry the vendor token for their parquet-dir
+        # descriptors and never re-bump; see actions.DV_FEATURE_NAME.)
+        # ``upgraded_protocol`` PRESERVES features the table already
+        # advertises (columnMapping, inCommitTimestamp, …) — protocol
+        # replays replace wholesale, so a bare bump would drop them.
+        bump = upgraded_protocol(
+            table.snapshot.state,
+            3,
+            7,
+            reader_features=["deletionVectors"],
+            writer_features=["deletionVectors"],
+        )
+        if bump is not None:
+            txn.add_action(bump)
     id_meta, id_guard = _identity_commit_extras(table, identity_assigned or {}, adds)
     if id_meta is not None:
         txn.add_action(id_meta)
@@ -395,32 +469,218 @@ def _stage_and_swap(
         txn.add_commit_guard(id_guard)
     txn.add_actions(cdc_actions)
     txn.add_actions(list(extra_actions or []))
-    for old in removed:
-        txn.add_action(
-            RemoveAction(
-                path=old.path,
-                deletion_timestamp=now_ms,
-                data_change=True,
-                extended_file_metadata=True,
-                partition_values=old.partition_values,
-                size=old.size,
-                deletion_vector=old.deletion_vector,
-                base_row_id=old.base_row_id,
-                default_row_commit_version=old.default_row_commit_version,
-            )
-        )
+    now_ms = int(time.time() * 1000)
+    txn.add_actions([RemoveAction.for_add(a, now_ms) for a in removed])
     txn.add_actions(list(adds))
-    metrics = {
-        "numRemovedFiles": str(len(removed)),
-        "numAddedFiles": str(len(adds)),
-        "numOutputBytes": str(sum(a.size for a in adds)),
-        **{k: str(v) for k, v in extra_metrics.items()},
-    }
     version = txn.commit(
-        operation=operation, operation_parameters=params, operation_metrics=metrics
+        operation=operation,
+        operation_parameters=params,
+        operation_metrics={k: str(v) for k, v in metrics.items()},
     )
     table.update()
-    return {"version": version, **{k: int(v) if str(v).isdigit() else v for k, v in metrics.items()}}
+    return {
+        "version": version,
+        **{k: int(v) if str(v).isdigit() else v for k, v in metrics.items()},
+    }
+
+
+def _copy_on_write(
+    spark: SparkSession,
+    table: DeltaTable,
+    new_rows: DataFrame,
+    removed: list[AddAction],
+    operation: str,
+    params: dict[str, Any],
+    counts: dict[str, Any],
+    max_records_per_file: Optional[int] = None,
+    schema=None,
+    **commit_kw,
+) -> dict[str, Any]:
+    """Copy-on-write swap: stage ``new_rows`` (the rewritten content of the
+    ``removed`` files, plus any inserts) and commit Remove + Add."""
+    adds = _stage_rows(spark, table, new_rows, schema, max_records_per_file)
+    metrics = {
+        "numRemovedFiles": len(removed),
+        "numAddedFiles": len(adds),
+        "numOutputBytes": sum(a.size for a in adds),
+        **counts,
+    }
+    return _commit(
+        table, operation, params, metrics, removed, adds, schema=schema, **commit_kw
+    )
+
+
+# Above this many matched positions a merge-on-read DML falls back to
+# copy-on-write: the whole point of a DV is that positions are tiny next to
+# the data files; a delete touching tens of millions of rows rewrites less
+# total I/O as a plain rewrite than it would spend shipping + forever
+# re-applying a giant bitmap (10M positions ~ 80MB driver-side).
+DV_MAX_POSITIONS = 10_000_000
+
+
+def _merge_on_read(
+    spark: SparkSession,
+    table: DeltaTable,
+    candidates: list[AddAction],
+    hits: DataFrame,
+    counts: Callable[[int, int], dict[str, int]],
+    unchanged: tuple[str, ...],
+    positions: Optional[DataFrame] = None,
+    new_rows: Optional[DataFrame] = None,
+    inserts: Optional[DataFrame] = None,
+    change_rows: Optional[DataFrame] = None,
+    identity_assigned: Optional[dict] = None,
+    **commit_kw,
+) -> Optional[dict[str, Any]]:
+    """Merge-on-read swap, shared by DELETE, UPDATE and MERGE once the verb
+    has built its rows: the target rows in ``hits`` (their ``positions`` as
+    (path, row_index); ``hits`` itself by default) become deletion vectors
+    on their ``candidates`` files; ``new_rows`` and the source ``inserts``
+    are staged as new files; one commit swaps them in.
+
+    Returns None, having written nothing, when more than
+    ``DV_MAX_POSITIONS`` rows would be deleted: the caller then rewrites
+    the files instead. ``counts(rows_deleted_in_place, rows_inserted)``
+    gives the verb's row metrics; ``unchanged`` names the zero counts of
+    the result when nothing matched."""
+    hits = hits.cache()
+    try:
+        if hits.count() > DV_MAX_POSITIONS:
+            return None  # bulk change: caller falls back to copy-on-write
+        removed, re_adds, per_file = _dv_swap(
+            table.log, candidates, hits if positions is None else positions
+        )
+        n_inserted = 0
+        if inserts is not None:
+            # cached: counted, staged and (with CDF on) written as changes
+            inserts = inserts.cache()
+            n_inserted = inserts.count()
+        try:
+            if not per_file and not n_inserted:
+                return _no_change(table, *unchanged)
+            if n_inserted:
+                # inserts carry no materialized id columns (fresh rows
+                # take the new file's baseRowId) — NULL-fill them
+                new_rows = (
+                    inserts
+                    if new_rows is None
+                    else new_rows.unionByName(inserts, allowMissingColumns=True)
+                )
+                if cdf_enabled(table):
+                    ins = inserts.withColumn(CHANGE_TYPE_COL, F.lit("insert"))
+                    change_rows = ins if change_rows is None else change_rows.unionByName(ins)
+            adds = _stage_rows(spark, table, new_rows) if new_rows is not None else []
+            metrics = {
+                "numRemovedFiles": len(removed) - len(re_adds),
+                "numAddedFiles": len(adds),
+                **counts(sum(per_file.values()), n_inserted),
+                "numDeletionVectorsAdded": len(re_adds),
+            }
+            return _commit(
+                table,
+                metrics=metrics,
+                removed=removed,
+                adds=re_adds + adds,
+                change_rows=change_rows,
+                identity_assigned=identity_assigned if n_inserted else None,
+                **commit_kw,
+            )
+        finally:
+            if inserts is not None:
+                inserts.unpersist()
+    finally:
+        hits.unpersist()
+
+
+def _dv_swap(
+    log, candidates: list[AddAction], pos_df
+) -> tuple[list[AddAction], list[AddAction], dict[str, int]]:
+    """Collect ``pos_df`` (path, row_index — MUST be cached by the caller)
+    into spec-format RoaringBitmap deletion vectors for the touched adds:
+    each is removed and re-added with the merged DV descriptor, or only
+    removed when every physical row of the file is now dead.
+
+    Position sets come to the driver (grouped per file, Arrow-batched) —
+    the same bounded materialization every Delta implementation performs
+    when writing DVs; deletes too bulky for that are exactly the ones
+    copy-on-write serves better (``DV_MAX_POSITIONS`` guards the cap and
+    the caller falls back). Prior DVs (spec or pre-round-3 parquet-dir
+    format) are decoded and unioned, so repeated deletes merge into one
+    bitmap per file instead of chaining artifacts.
+
+    Returns (adds to remove, their DV re-adds, per-file match counts)."""
+    import dataclasses
+
+    from .protocol.dv import build_descriptors, descriptor_positions
+
+    per_file_rows = (
+        pos_df.groupBy("path")
+        .agg(F.collect_list("row_index").alias("positions"))
+        .collect()
+    )
+    if not per_file_rows:
+        return [], [], {}
+
+    # every lineage-derived key MUST resolve to a candidate add — a silent
+    # zero-match here would commit numDeletedRows>0 with no swap actions
+    by_path = {a.path: a for a in candidates}
+    by_norm = {_norm_file_uri(a.path): a for a in candidates}
+    matched_adds: dict[str, int] = {}
+    new_positions: dict[str, set[int]] = {}
+    for r in per_file_rows:
+        key = r["path"]
+        add = by_path.get(key) or by_norm.get(_norm_file_uri(key))
+        if add is None:
+            raise DMLError(
+                f"deletion-vector position key {key!r} matches no candidate "
+                f"add (candidates: {sorted(by_path)[:3]}...)"
+            )
+        matched_adds[add.path] = matched_adds.get(add.path, 0) + len(r["positions"])
+        new_positions.setdefault(add.path, set()).update(r["positions"])
+
+    removed = [a for a in candidates if a.path in matched_adds]
+    merged: dict[str, list[int]] = {}
+    for old in removed:
+        combined = set(new_positions[old.path])
+        if old.deletion_vector:
+            combined.update(descriptor_positions(log, old.deletion_vector, old.path))
+        if old.num_records is not None and len(combined) >= old.num_records:
+            continue  # every live row gone — the remove alone retires it
+        merged[old.path] = sorted(combined)
+
+    descriptors, file_out = build_descriptors(merged)
+    if file_out is not None:
+        rel_name, body = file_out
+        log.data_plane.publish_bytes(body, rel_name)
+    now_ms = int(time.time() * 1000)
+    re_adds = [
+        dataclasses.replace(
+            old,
+            deletion_vector=descriptors[old.path],
+            modification_time=now_ms,
+            data_change=True,
+        )
+        for old in removed
+        if old.path in merged
+    ]
+    return removed, re_adds, matched_adds
+
+
+def dv_enabled(table: DeltaTable) -> bool:
+    cfg = table.metadata().configuration or {}
+    return str(cfg.get("delta.enableDeletionVectors", "")).lower() == "true"
+
+
+def _mor_eligible(table: DeltaTable, candidates: list[AddAction]) -> bool:
+    """Merge-on-read needs row lineage: the scan-side file identity is
+    recovered by stripping the scan root from ``_metadata.file_path``, which
+    only matches adds stored with log-relative paths (shallow-clone adds are
+    absolute → fall back to copy-on-write). Any storage backend qualifies —
+    DV position files flow through the table's DataPlane (native Spark I/O
+    or backend-mirrored, see ``protocol/dataio.py``)."""
+    return all(
+        "://" not in a.path and not a.path.startswith("/") for a in candidates
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -445,45 +705,14 @@ def _tombstone_files(
     """Metadata-only delete of whole files: one commit of tombstones, zero
     data read or written. Row counts come from per-file stats when every
     file has them."""
-    import time as _time
-
-    from .transactions import DeltaTransaction
-
-    now_ms = int(_time.time() * 1000)
-    txn = DeltaTransaction(table)
-    if reads:
-        txn.record_reads(**reads)
-    n_rows = 0
-    rows_known = True
-    for a in adds:
-        n = a.logical_records
-        if n is None:
-            rows_known = False
-        else:
-            n_rows += n
-        txn.add_action(
-            RemoveAction(
-                path=a.path,
-                deletion_timestamp=now_ms,
-                data_change=True,
-                extended_file_metadata=True,
-                partition_values=a.partition_values,
-                size=a.size,
-                deletion_vector=a.deletion_vector,
-                base_row_id=a.base_row_id,
-                default_row_commit_version=a.default_row_commit_version,
-            )
-        )
-    metrics = {"numRemovedFiles": len(adds)}
-    if rows_known:
-        metrics["numDeletedRows"] = n_rows
-    version = txn.commit(
-        operation="DELETE",
-        operation_parameters={"predicate": predicate},
-        operation_metrics={k: str(v) for k, v in metrics.items()},
+    metrics: dict[str, Any] = {"numRemovedFiles": len(adds)}
+    rows = [a.logical_records for a in adds]
+    if None not in rows:
+        metrics["numDeletedRows"] = sum(rows)
+    res = _commit(
+        table, "DELETE", {"predicate": predicate}, metrics, removed=adds, reads=reads
     )
-    table.update()
-    return {"version": version, "numAddedFiles": 0, **metrics}
+    return {**res, "numAddedFiles": 0}
 
 
 def _partition_exact_files(
@@ -523,23 +752,10 @@ def _partition_exact_files(
     return table.snapshot.files(partition_filters=filters)
 
 
-def dv_enabled(table: DeltaTable) -> bool:
-    cfg = table.metadata().configuration or {}
-    return str(cfg.get("delta.enableDeletionVectors", "")).lower() == "true"
-
-
-# Above this many matched positions a merge-on-read DML falls back to
-# copy-on-write: the whole point of a DV is that positions are tiny next to
-# the data files; a delete touching tens of millions of rows rewrites less
-# total I/O as a plain rewrite than it would spend shipping + forever
-# re-applying a giant bitmap (10M positions ~ 80MB driver-side).
-DV_MAX_POSITIONS = 10_000_000
-
-
 def _delete_merge_on_read(
     spark: SparkSession, table: DeltaTable, predicate: str, cond: Column,
     candidates: list[AddAction], reads: Optional[dict[str, Any]] = None,
-) -> dict[str, Any]:
+) -> Optional[dict[str, Any]]:
     """``DELETE`` without rewriting data files: record the matching rows'
     (file, row_index) positions as a deletion vector and re-commit the same
     files with DV descriptors.
@@ -551,209 +767,25 @@ def _delete_merge_on_read(
     Readers pay one (usually broadcast) anti join on the DV'd files only;
     OPTIMIZE later materializes the deletes and drops the vectors.
     """
-    from .cdf import write_change_files
-
     snap = table._snapshot
-    log = table.log
-    FILE, POS = snap.FILE_LINEAGE_COL, snap.POS_LINEAGE_COL
-
     df = snap.df_for_adds(spark, candidates, with_lineage=True)
-    hits = df.filter(cond).select(
-        F.col(FILE).alias("path"), F.col(POS).alias("row_index")
-    )
-    hits = hits.cache()
-    try:
-        if hits.count() > DV_MAX_POSITIONS:
-            return None  # bulk delete: caller falls back to copy-on-write
-        actions, per_file, n_tomb = _dv_swap_actions(log, candidates, hits)
-        n_deleted = sum(per_file.values())
-        if not per_file:
-            return {
-                "version": table.version,
-                "numRemovedFiles": 0,
-                "numAddedFiles": 0,
-                "numDeletedRows": 0,
-                "numDeletionVectorsAdded": 0,
-            }
-
-        if cdf_enabled(table):
-            change_rows = df.filter(cond).select(*table.schema().names).withColumn(
-                CHANGE_TYPE_COL, F.lit("delete")
-            )
-            actions = (
-                write_change_files(
-                    spark, log, change_rows,
-                    table_schema=table.schema(),
-                    configuration=table.metadata().configuration,
-                )
-                + actions
-            )
-
-        metrics = {
-            "numRemovedFiles": str(n_tomb),
-            "numAddedFiles": "0",
-            "numDeletedRows": str(n_deleted),
-            "numDeletionVectorsAdded": str(len(per_file) - n_tomb),
-        }
-        version = _commit_dv_txn(
-            table, actions, "DELETE", {"predicate": predicate}, metrics, reads=reads
+    change_rows = None
+    if cdf_enabled(table):
+        change_rows = df.filter(cond).select(*table.schema().names).withColumn(
+            CHANGE_TYPE_COL, F.lit("delete")
         )
-        return {"version": version, **{k: int(v) for k, v in metrics.items()}}
-    finally:
-        hits.unpersist()
-
-
-def _dv_swap_actions(log, candidates: list[AddAction], pos_df) -> tuple[list, dict, int]:
-    """Collect ``pos_df`` (path, row_index — MUST be cached by the caller)
-    into spec-format RoaringBitmap deletion vectors and build the log
-    actions that swap the touched adds: Remove(old) + re-Add with the
-    merged DV descriptor, or a plain tombstone when every physical row of
-    the file is now dead.
-
-    Position sets come to the driver (grouped per file, Arrow-batched) —
-    the same bounded materialization every Delta implementation performs
-    when writing DVs; deletes too bulky for that are exactly the ones
-    copy-on-write serves better (``DV_MAX_POSITIONS`` guards the cap and
-    the caller falls back). Prior DVs (spec or pre-round-3 parquet-dir
-    format) are decoded and unioned, so repeated deletes merge into one
-    bitmap per file instead of chaining artifacts.
-
-    Returns (actions, per_file match counts, tombstoned-file count)."""
-    import dataclasses
-
-    from .protocol.dv import build_descriptors, descriptor_positions
-
-    per_file_rows = (
-        pos_df.groupBy("path")
-        .agg(F.collect_list("row_index").alias("positions"))
-        .collect()
+    return _merge_on_read(
+        spark,
+        table,
+        candidates,
+        _positions(df.filter(cond), snap.FILE_LINEAGE_COL, snap.POS_LINEAGE_COL),
+        lambda n_deleted, _: {"numDeletedRows": n_deleted},
+        ("numDeletedRows", "numDeletionVectorsAdded"),
+        change_rows=change_rows,
+        operation="DELETE",
+        params={"predicate": predicate},
+        reads=reads,
     )
-    if not per_file_rows:
-        return [], {}, 0
-
-    # every lineage-derived key MUST resolve to a candidate add — a silent
-    # zero-match here would commit numDeletedRows>0 with no swap actions
-    by_path = {a.path: a for a in candidates}
-    by_norm = {_norm_file_uri(a.path): a for a in candidates}
-    matched_adds: dict[str, int] = {}
-    new_positions: dict[str, set[int]] = {}
-    for r in per_file_rows:
-        key = r["path"]
-        add = by_path.get(key) or by_norm.get(_norm_file_uri(key))
-        if add is None:
-            raise DMLError(
-                f"deletion-vector position key {key!r} matches no candidate "
-                f"add (candidates: {sorted(by_path)[:3]}...)"
-            )
-        matched_adds[add.path] = matched_adds.get(add.path, 0) + len(r["positions"])
-        new_positions.setdefault(add.path, set()).update(r["positions"])
-
-    now_ms = int(time.time() * 1000)
-    actions: list = []
-    n_tombstoned = 0
-    merged: dict[str, list[int]] = {}
-    swap_adds: list[AddAction] = []
-    for old in (a for a in candidates if a.path in matched_adds):
-        combined = set(new_positions[old.path])
-        if old.deletion_vector:
-            combined.update(descriptor_positions(log, old.deletion_vector, old.path))
-        actions.append(
-            RemoveAction(
-                path=old.path,
-                deletion_timestamp=now_ms,
-                data_change=True,
-                extended_file_metadata=True,
-                partition_values=old.partition_values,
-                size=old.size,
-                deletion_vector=old.deletion_vector,
-                base_row_id=old.base_row_id,
-                default_row_commit_version=old.default_row_commit_version,
-            )
-        )
-        if old.num_records is not None and len(combined) >= old.num_records:
-            n_tombstoned += 1  # every live row gone — no DV re-add needed
-            continue
-        merged[old.path] = sorted(combined)
-        swap_adds.append(old)
-
-    descriptors, file_out = build_descriptors(merged)
-    if file_out is not None:
-        rel_name, body = file_out
-        log.data_plane.publish_bytes(body, rel_name)
-    for old in swap_adds:
-        actions.append(
-            dataclasses.replace(
-                old,
-                deletion_vector=descriptors[old.path],
-                modification_time=now_ms,
-                data_change=True,
-            )
-        )
-    return actions, matched_adds, n_tombstoned
-
-
-def _commit_dv_txn(
-    table: DeltaTable, actions: list, operation: str, params: dict, metrics: dict,
-    guard=None, reads: Optional[dict[str, Any]] = None,
-) -> int:
-    """One DV commit: protocol bump to reader 3 / writer 7 on first use
-    (deletion vectors are a reader-visible feature — foreign readers must
-    fail fast), then the swap actions."""
-    txn = DeltaTransaction(table)
-    if reads:
-        txn.record_reads(**reads)
-    if guard is not None:
-        txn.add_commit_guard(guard)
-    if any(isinstance(a, AddAction) and a.deletion_vector for a in actions):
-        from .protocol.actions import upgraded_protocol
-
-        # readerFeatures/writerFeatures are mandatory at 3/7 per the public
-        # Delta spec. The bump only ever fires on a table's FIRST DV commit,
-        # and every descriptor this engine writes is the spec RoaringBitmap
-        # format (protocol/dv.py) — so the spec's own feature token is
-        # correct and the table is foreign-readable. (Tables bumped by
-        # pre-round-3 builds carry the vendor token for their parquet-dir
-        # descriptors and never re-bump; see actions.DV_FEATURE_NAME.)
-        # ``upgraded_protocol`` PRESERVES features the table already
-        # advertises (columnMapping, inCommitTimestamp, …) — protocol
-        # replays replace wholesale, so a bare bump would drop them.
-        bump = upgraded_protocol(
-            table.snapshot.state,
-            3,
-            7,
-            reader_features=["deletionVectors"],
-            writer_features=["deletionVectors"],
-        )
-        if bump is not None:
-            txn.add_action(bump)
-    txn.add_actions(actions)
-    version = txn.commit(
-        operation=operation, operation_parameters=params, operation_metrics=metrics
-    )
-    table.update()
-    return version
-
-
-def _mor_eligible(table: DeltaTable, candidates: list[AddAction]) -> bool:
-    """Merge-on-read needs row lineage: the scan-side file identity is
-    recovered by stripping the scan root from ``_metadata.file_path``, which
-    only matches adds stored with log-relative paths (shallow-clone adds are
-    absolute → fall back to copy-on-write). Any storage backend qualifies —
-    DV position files flow through the table's DataPlane (native Spark I/O
-    or backend-mirrored, see ``protocol/dataio.py``)."""
-    return all(
-        "://" not in a.path and not a.path.startswith("/") for a in candidates
-    )
-
-
-def _dir_bytes(path: str) -> int:
-    import os
-
-    total = 0
-    for dirpath, _dirs, files in os.walk(path):
-        for f in files:
-            total += os.path.getsize(os.path.join(dirpath, f))
-    return total
 
 
 def delete(
@@ -765,8 +797,8 @@ def delete(
     (SQL DELETE semantics). Default is copy-on-write: only files containing
     at least one matching row are rewritten; commit is Remove+Add in one
     version, operation "DELETE". With table property
-    ``delta.enableDeletionVectors=true`` (and a local-filesystem table whose
-    adds use log-relative paths), the delete is merge-on-read instead — see
+    ``delta.enableDeletionVectors=true`` (and adds with log-relative
+    paths), the delete is merge-on-read instead — see
     ``_delete_merge_on_read``.
 
     No predicate = delete EVERYTHING: the Delta fast path — every active
@@ -785,13 +817,7 @@ def delete(
     full = _partition_exact_files(table, predicate)
     if full is not None:
         if not full:
-            return {
-                "version": table.version,
-                "numRemovedFiles": 0,
-                "numAddedFiles": 0,
-                "numDeletedRows": 0,
-                "numCopiedRows": 0,
-            }
+            return _no_change(table, "numDeletedRows", "numCopiedRows")
         return _tombstone_files(
             table, full, predicate, reads=_predicate_reads(table, predicate, full)
         )
@@ -807,30 +833,16 @@ def delete(
         # positions exceeded DV_MAX_POSITIONS — a delete that bulky rewrites
         # fewer bytes as plain copy-on-write, so fall through
     matched, n_deleted = _files_with_matches(spark, table, candidates, cond)
-    params = {"predicate": predicate}
     if not matched:
-        return {
-            "version": table.version,
-            "numRemovedFiles": 0,
-            "numAddedFiles": 0,
-            "numDeletedRows": 0,
-            "numCopiedRows": 0,
-        }
+        return _no_change(table, "numDeletedRows", "numCopiedRows")
 
     from .protocol import row_tracking as rt
 
     cfg = table.metadata().configuration
-    rt_on = rt.enabled(cfg)
-    snap = table._snapshot
-    df = snap.df_for_adds(spark, matched, with_row_ids=rt_on)
-    keep = df.filter(~cond)
-    if rt_on:
-        # survivors keep their row ids: written as materialized columns the
-        # reader coalesces ahead of baseRowId + row_index
-        mat_id, mat_cv = rt.materialized_names(cfg)
-        keep = keep.withColumnRenamed(rt.ROW_ID_COL, mat_id).withColumnRenamed(
-            rt.ROW_CV_COL, mat_cv
-        )
+    df = table._snapshot.df_for_adds(spark, matched, with_row_ids=rt.enabled(cfg))
+    # survivors keep their row ids: written as materialized columns the
+    # reader coalesces ahead of baseRowId + row_index
+    keep = df.filter(~cond).select(*table.schema().names, *rt.carried_id_columns(cfg))
     # logical (DV-net) counts: files re-routed here with DVs attached
     # (e.g. absolute-path clones) must not inflate metrics by dead rows
     total_in_matched = sum(a.logical_records or 0 for a in matched)
@@ -846,13 +858,13 @@ def delete(
             .withColumn(CHANGE_TYPE_COL, F.lit("delete"))
         )
 
-    return _stage_and_swap(
+    return _copy_on_write(
         spark,
         table,
         keep,
         matched,
         "DELETE",
-        params,
+        {"predicate": predicate},
         {"numDeletedRows": n_deleted, "numCopiedRows": n_copied if n_copied is not None else ""},
         change_rows=change_rows,
         reads=reads,
@@ -871,7 +883,7 @@ def _update_merge_on_read(
     cond: Column,
     candidates: list[AddAction],
     reads: Optional[dict[str, Any]] = None,
-) -> dict[str, Any]:
+) -> Optional[dict[str, Any]]:
     """``UPDATE`` without rewriting unmatched rows: DV the matched rows'
     positions in their existing files and write ONLY the updated rows as new
     files — one commit of Remove + DV re-Add + Add.
@@ -879,126 +891,54 @@ def _update_merge_on_read(
     The scale shape: updating 1k rows scattered across TB-sized files
     copy-on-writes the full files; merge-on-read writes 1k rows plus
     kilobytes of positions. Readers see the same atomic swap."""
-    from .cdf import write_change_files
-    from .protocol import row_tracking as _rtu
+    from .protocol import generated as _gen
+    from .protocol import row_tracking as rt
 
     snap = table._snapshot
-    log = table.log
-    schema = table.schema()
-    cfg = table.metadata().configuration or {}
-    rt_on = _rtu.enabled(cfg)
-    FILE, POS = snap.FILE_LINEAGE_COL, snap.POS_LINEAGE_COL
-
-    df = snap.df_for_adds(
-        spark, candidates, with_lineage=True, with_row_ids=rt_on
-    )
-    matched_df = df.filter(cond).cache()
-    try:
-        if matched_df.count() > DV_MAX_POSITIONS:
-            return None  # bulk update: caller falls back to copy-on-write
-        from .protocol import generated as _gen
-
-        types = {f.name: f.dataType for f in schema.fields}
-        upd_cols = [
-            F.expr(assignments[c]).cast(types[c]).alias(c)
-            if c in assignments
-            else F.col(c)
-            for c in schema.names
-        ]
-        if rt_on:
-            # an UPDATE changes values, not identity: carry the row ids as
-            # materialized columns (same contract as the copy-on-write path)
-            mat_id, mat_cv = _rtu.materialized_names(cfg)
-            upd_cols += [
-                F.col(_rtu.ROW_ID_COL).alias(mat_id),
-                F.col(_rtu.ROW_CV_COL).alias(mat_cv),
-            ]
-        updated_rows = matched_df.select(*upd_cols)
-        updated_rows = _gen.recompute(updated_rows, schema)
-
-        pos = matched_df.select(
-            F.col(FILE).alias("path"), F.col(POS).alias("row_index")
-        )
-        actions, per_file, n_tomb = _dv_swap_actions(log, candidates, pos)
-        n_updated = sum(per_file.values())
-        if not per_file:
-            return {
-                "version": table.version,
-                "numRemovedFiles": 0,
-                "numAddedFiles": 0,
-                "numUpdatedRows": 0,
-            }
-
-        new_adds = _stage_new_rows(spark, table, updated_rows)
-
-        if cdf_enabled(table):
-            pre = matched_df.select(*schema.names).withColumn(
-                CHANGE_TYPE_COL, F.lit("update_preimage")
-            )
-            post = updated_rows.select(*schema.names).withColumn(
-                CHANGE_TYPE_COL, F.lit("update_postimage")
-            )
-            actions = (
-                write_change_files(
-                    spark, log, pre.unionByName(post),
-                    table_schema=schema,
-                    configuration=table.metadata().configuration,
-                )
-                + actions
-            )
-
-        actions.extend(list(new_adds))
-        metrics = {
-            "numRemovedFiles": str(n_tomb),
-            "numAddedFiles": str(len(new_adds)),
-            "numUpdatedRows": str(n_updated),
-            "numDeletionVectorsAdded": str(len(per_file) - n_tomb),
-        }
-        version = _commit_dv_txn(
-            table, actions, "UPDATE", {"predicate": predicate}, metrics, reads=reads
-        )
-        return {"version": version, **{k: int(v) for k, v in metrics.items()}}
-    finally:
-        matched_df.unpersist()
-
-
-def _stage_new_rows(spark: SparkSession, table: DeltaTable, rows: DataFrame) -> list:
-    """Write ``rows`` through the staged-write path (CHECK constraints,
-    per-file footer stats, partition layout) and return their Add actions."""
-    import uuid as _uuid
-
-    from .writer import _promote_staged_files, check_constraints, data_skipping_columns
-
-    from .protocol import column_mapping as cm
-
-    log = table.log
-    pcols = table.metadata().partition_columns
     schema = table.schema()
     cfg = table.metadata().configuration
-    check_constraints(rows, cfg, schema=schema)
-    stats_cols = data_skipping_columns(cfg, schema.names)
-    from .protocol import identity as _idc
-
-    _idn = set(_idc.specs(schema))
-    if _idn and stats_cols is not None:
-        stats_cols = stats_cols | _idn  # water marks read these footer stats
-    if cm.is_mapped(cfg):
-        rows = cm.to_physical_df(rows, schema)
-        phys = cm.top_level_physical(schema)
-        pcols = [phys[c] for c in pcols]
-        if stats_cols is not None:
-            stats_cols = {phys.get(c, c) for c in stats_cols}
-    staging = log.data_plane.stage_dir("commit")
-    writer = rows.write.mode("overwrite")
-    if pcols:
-        writer = writer.partitionBy(*pcols)
-    writer.parquet(staging)
-    return _promote_staged_files(
+    df = snap.df_for_adds(
+        spark, candidates, with_lineage=True, with_row_ids=rt.enabled(cfg)
+    )
+    matched_df = df.filter(cond)
+    types = {f.name: f.dataType for f in schema.fields}
+    # an UPDATE changes values, not identity: the row ids ride along
+    updated_rows = _gen.recompute(
+        matched_df.select(
+            *[
+                F.expr(assignments[c]).cast(types[c]).alias(c)
+                if c in assignments
+                else F.col(c)
+                for c in schema.names
+            ],
+            *rt.carried_id_columns(cfg),
+        ),
+        schema,
+    )
+    change_rows = None
+    if cdf_enabled(table):
+        pre = matched_df.select(*schema.names).withColumn(
+            CHANGE_TYPE_COL, F.lit("update_preimage")
+        )
+        post = updated_rows.select(*schema.names).withColumn(
+            CHANGE_TYPE_COL, F.lit("update_postimage")
+        )
+        change_rows = pre.unionByName(post)
+    # the matched rows are cached: they give the positions, the updated
+    # rows and both change images
+    return _merge_on_read(
         spark,
-        log,
-        staging,
-        pcols,
-        stats_columns=stats_cols,
+        table,
+        candidates,
+        matched_df,
+        lambda n_updated, _: {"numUpdatedRows": n_updated},
+        ("numUpdatedRows",),
+        positions=_positions(matched_df, snap.FILE_LINEAGE_COL, snap.POS_LINEAGE_COL),
+        new_rows=updated_rows,
+        change_rows=change_rows,
+        operation="UPDATE",
+        params={"predicate": predicate},
+        reads=reads,
     )
 
 
@@ -1040,33 +980,15 @@ def update(
         # bulk update past DV_MAX_POSITIONS: copy-on-write wins below
     matched, n_updated = _files_with_matches(spark, table, candidates, cond)
     if not matched:
-        return {
-            "version": table.version,
-            "numRemovedFiles": 0,
-            "numAddedFiles": 0,
-            "numUpdatedRows": 0,
-        }
+        return _no_change(table, "numUpdatedRows")
 
     from .protocol import row_tracking as rt
 
     cfg = table.metadata().configuration
-    rt_on = rt.enabled(cfg)
-    snap = table._snapshot
-    df = snap.df_for_adds(spark, matched, with_row_ids=rt_on)
+    df = table._snapshot.df_for_adds(spark, matched, with_row_ids=rt.enabled(cfg))
     types = {f.name: f.dataType for f in schema.fields}
-    assigned = [
-        F.expr(assignments[c]).cast(types[c]).alias(c) if c in assignments else F.col(c)
-        for c in schema.names
-    ]
-    out_cols = list(schema.names)
-    if rt_on:
-        # an UPDATE changes values, not identity: rewritten rows keep their
-        # ids via the materialized columns
-        mat_id, mat_cv = rt.materialized_names(cfg)
-        df = df.withColumnRenamed(rt.ROW_ID_COL, mat_id).withColumnRenamed(
-            rt.ROW_CV_COL, mat_cv
-        )
-        out_cols += [mat_id, mat_cv]
+    # an UPDATE changes values, not identity: rewritten rows keep their ids
+    # via the materialized columns
     projected = df.select(
         *[
             (
@@ -1076,10 +998,10 @@ def update(
                 if c in assignments
                 else F.col(c)
             )
-            for c in out_cols
-        ]
+            for c in schema.names
+        ],
+        *rt.carried_id_columns(cfg),
     )
-
     projected = _gen.recompute(projected, schema)
 
     change_rows = None
@@ -1091,12 +1013,19 @@ def update(
         )
         post = (
             df.filter(cond)
-            .select(*assigned)
+            .select(
+                *[
+                    F.expr(assignments[c]).cast(types[c]).alias(c)
+                    if c in assignments
+                    else F.col(c)
+                    for c in schema.names
+                ]
+            )
             .withColumn(CHANGE_TYPE_COL, F.lit("update_postimage"))
         )
         change_rows = pre.unionByName(post)
 
-    return _stage_and_swap(
+    return _copy_on_write(
         spark,
         table,
         projected,
@@ -1127,7 +1056,7 @@ def _merge_merge_on_read(
     when_not_matched_by_source_delete: bool,
     extra_actions: Optional[list],
     reads: Optional[dict[str, Any]] = None,
-) -> dict[str, Any]:
+) -> Optional[dict[str, Any]]:
     """MERGE without rewriting unmatched target rows: matched (and, for
     full-sync, source-unmatched) positions get DV'd in place; only the
     updated versions and the inserts are written as new files.
@@ -1135,15 +1064,11 @@ def _merge_merge_on_read(
     This turns MERGE cost from O(bytes in touched files) into O(bytes in
     changed rows) — the difference between an hourly 1M-row upsert
     rewriting a 100 TB table's hot files and appending megabytes."""
-    from .cdf import write_change_files
-    from .protocol import row_tracking as _rtg
+    from .protocol import generated as _gen
+    from .protocol import row_tracking as rt
 
-    snap = table._snapshot
-    log = table.log
     schema = table.schema()
-    cfg_m = table.metadata().configuration or {}
-    rt_on = _rtg.enabled(cfg_m)
-    all_adds = snap.files()
+    cfg = table.metadata().configuration
     types = {f.name: f.dataType for f in schema.fields}
     on = F.expr(condition)
     track = cdf_enabled(table)
@@ -1151,157 +1076,90 @@ def _merge_merge_on_read(
 
     # positions to kill: every matched target row (it is replaced or
     # deleted), plus — under full-sync — every target row no source matches
-    pos = per_row.select(F.col("_file").alias("path"), F.col("_tid").alias("row_index"))
+    pos = _positions(per_row, "_file", "_tid")
     if when_not_matched_by_source_delete:
         unmatched_t = t.join(s, on, "left_anti")
-        pos = pos.unionByName(
-            unmatched_t.select(
-                F.col("__file").alias("path"), F.col("__tid").alias("row_index")
-            )
-        )
+        pos = pos.unionByName(_positions(unmatched_t, "__file", "__tid"))
         if track:
             change_parts.append(
                 unmatched_t.select(*schema.names).withColumn(
                     CHANGE_TYPE_COL, F.lit("delete")
                 )
             )
-    pos = pos.cache()
-    try:
-        # same driver-materialization cap as DELETE/UPDATE: _dv_swap_actions
-        # collects every (path, row_index) pair — a full-sync MERGE against
-        # a mostly-unmatched huge target must take the rewrite path instead
-        if pos.count() > DV_MAX_POSITIONS:
-            return None  # caller falls back to copy-on-write
-        actions, per_file, n_tomb = _dv_swap_actions(log, all_adds, pos)
-        n_killed = sum(per_file.values())
-        n_unmatched_deleted = n_killed - n_matched
 
-        n_updated = n_deleted = 0
-        new_parts: list[DataFrame] = []
-        if n_matched:
-            inner = t.join(s, on, "inner")
-            if when_matched_delete:
-                n_deleted += n_matched
-                if track:
-                    change_parts.append(
-                        inner.select(*[F.col(f"t.{c}").alias(c) for c in schema.names])
-                        .withColumn(CHANGE_TYPE_COL, F.lit("delete"))
+    n_updated = n_deleted = 0
+    upd = None
+    if n_matched:
+        inner = t.join(s, on, "inner")
+        if when_matched_delete:
+            n_deleted = n_matched
+            if track:
+                change_parts.append(
+                    inner.select(*[F.col(f"t.{c}").alias(c) for c in schema.names])
+                    .withColumn(CHANGE_TYPE_COL, F.lit("delete"))
+                )
+        else:
+            assignments = when_matched_update or {c: f"s.{c}" for c in schema.names}
+            bad = set(assignments) - set(schema.names)
+            if bad:
+                raise DMLError(f"MERGE updates unknown columns: {sorted(bad)}")
+            # updated rows keep their identity (materialized ids)
+            upd = _gen.recompute(
+                inner.select(
+                    *[
+                        F.expr(assignments[c]).cast(types[c]).alias(c)
+                        if c in assignments
+                        else F.col(f"t.{c}").alias(c)
+                        for c in schema.names
+                    ],
+                    *rt.carried_id_columns(cfg, "t."),
+                ),
+                schema,
+            )
+            n_updated = n_matched
+            if track:
+                change_parts.append(
+                    inner.select(*[F.col(f"t.{c}").alias(c) for c in schema.names])
+                    .withColumn(CHANGE_TYPE_COL, F.lit("update_preimage"))
+                )
+                change_parts.append(
+                    upd.select(*schema.names).withColumn(
+                        CHANGE_TYPE_COL, F.lit("update_postimage")
                     )
-            else:
-                assignments = when_matched_update or {c: f"s.{c}" for c in schema.names}
-                bad = set(assignments) - set(schema.names)
-                if bad:
-                    raise DMLError(f"MERGE updates unknown columns: {sorted(bad)}")
-                upd_cols = [
-                    F.expr(assignments[c]).cast(types[c]).alias(c)
-                    if c in assignments
-                    else F.col(f"t.{c}").alias(c)
-                    for c in schema.names
-                ]
-                if rt_on:
-                    # updated rows keep their identity (materialized ids)
-                    mat_id_m, mat_cv_m = _rtg.materialized_names(cfg_m)
-                    upd_cols += [
-                        F.col(f"t.{_rtg.ROW_ID_COL}").alias(mat_id_m),
-                        F.col(f"t.{_rtg.ROW_CV_COL}").alias(mat_cv_m),
-                    ]
-                upd = inner.select(*upd_cols)
-                from .protocol import generated as _gen
-
-                upd = _gen.recompute(upd, schema)
-                new_parts.append(upd)
-                n_updated = n_matched
-                if track:
-                    change_parts.append(
-                        inner.select(*[F.col(f"t.{c}").alias(c) for c in schema.names])
-                        .withColumn(CHANGE_TYPE_COL, F.lit("update_preimage"))
-                    )
-                    change_parts.append(
-                        upd.select(*schema.names).withColumn(
-                            CHANGE_TYPE_COL, F.lit("update_postimage")
-                        )
-                    )
-        n_deleted += n_unmatched_deleted
-
-        n_inserted = 0
-        inserts = None
-        id_assigned: dict = {}
-        if when_not_matched_insert:
-            from .protocol import generated as _gen_i
-
-            ins_exprs, id_assigned = _insert_select_exprs(schema, set(s.columns))
-            # generated columns recompute on inserts too — the copy-on-write
-            # path validates the whole union; source-provided values must
-            # not persist unvalidated on this path either
-            inserts = _gen_i.recompute(
-                s.join(t, on, "left_anti").select(*ins_exprs), schema
-            ).cache()
-            n_inserted = inserts.count()
-            if n_inserted:
-                new_parts.append(inserts)
-                if track:
-                    change_parts.append(
-                        inserts.withColumn(CHANGE_TYPE_COL, F.lit("insert"))
-                    )
-
-        try:
-            if not per_file and not n_inserted:
-                return {
-                    "version": table.version,
-                    "numRemovedFiles": 0,
-                    "numAddedFiles": 0,
-                    "numTargetRowsUpdated": 0,
-                    "numTargetRowsDeleted": 0,
-                    "numTargetRowsInserted": 0,
-                }
-
-            new_adds: list = []
-            if new_parts:
-                new_rows = new_parts[0]
-                for p in new_parts[1:]:
-                    # inserts carry no materialized id columns (fresh rows
-                    # take the new file's baseRowId) — NULL-fill them
-                    new_rows = new_rows.unionByName(p, allowMissingColumns=True)
-                new_adds = _stage_new_rows(spark, table, new_rows)
-
-            if track and change_parts:
-                change_rows = change_parts[0]
-                for p in change_parts[1:]:
-                    change_rows = change_rows.unionByName(p)
-                actions = (
-                    write_change_files(
-                        spark, log, change_rows,
-                        table_schema=table.schema(),
-                        configuration=table.metadata().configuration,
-                    )
-                    + actions
                 )
 
-            actions.extend(list(new_adds))
-            actions.extend(list(extra_actions or []))
-            metrics = {
-                "numRemovedFiles": str(n_tomb),
-                "numAddedFiles": str(len(new_adds)),
-                "numTargetRowsUpdated": str(n_updated),
-                "numTargetRowsDeleted": str(n_deleted),
-                "numTargetRowsInserted": str(n_inserted),
-                "numDeletionVectorsAdded": str(len(per_file) - n_tomb),
-            }
-            id_meta, id_guard = _identity_commit_extras(
-                table, id_assigned if n_inserted else {}, new_adds
-            )
-            if id_meta is not None:
-                actions = [id_meta] + actions
-            version = _commit_dv_txn(
-                table, actions, "MERGE", {"predicate": condition}, metrics,
-                guard=id_guard, reads=reads,
-            )
-            return {"version": version, **{k: int(v) for k, v in metrics.items()}}
-        finally:
-            if inserts is not None:
-                inserts.unpersist()
-    finally:
-        pos.unpersist()
+    inserts = None
+    id_assigned: dict = {}
+    if when_not_matched_insert:
+        ins_exprs, id_assigned = _insert_select_exprs(schema, set(s.columns))
+        # generated columns recompute on inserts too — the copy-on-write
+        # path validates the whole union; source-provided values must
+        # not persist unvalidated on this path either
+        inserts = _gen.recompute(s.join(t, on, "left_anti").select(*ins_exprs), schema)
+
+    # same driver-materialization cap as DELETE/UPDATE: a full-sync MERGE
+    # against a mostly-unmatched huge target takes the rewrite path instead
+    return _merge_on_read(
+        spark,
+        table,
+        table._snapshot.files(),
+        pos,
+        lambda n_killed, n_inserted: {
+            "numTargetRowsUpdated": n_updated,
+            "numTargetRowsDeleted": n_deleted + n_killed - n_matched,
+            "numTargetRowsInserted": n_inserted,
+        },
+        ("numTargetRowsUpdated", "numTargetRowsDeleted", "numTargetRowsInserted"),
+        new_rows=upd,
+        inserts=inserts,
+        change_rows=_union(change_parts),
+        identity_assigned=id_assigned,
+        extra_actions=extra_actions,
+        operation="MERGE",
+        params={"predicate": condition},
+        reads=reads,
+    )
+
 
 def merge(
     spark: SparkSession,
@@ -1315,7 +1173,7 @@ def merge(
     extra_actions: Optional[list] = None,
     schema_evolution: bool = False,
 ) -> dict[str, Any]:
-    """``MERGE INTO target t USING source s ON condition`` — copy-on-write.
+    """``MERGE INTO target t USING source s ON condition``.
 
     - ``condition`` references ``t.<col>`` / ``s.<col>`` (e.g.
       ``"t.doc_id = s.doc_id"``).
@@ -1356,13 +1214,14 @@ def merge(
         ]
         if evolved_fields:
             schema = T.StructType(list(schema.fields) + evolved_fields)
-    from .protocol import row_tracking as _rtm0
+    from .protocol import row_tracking as rt
 
-    _rt_on0 = _rtm0.enabled(table.metadata().configuration)
+    cfg = table.metadata().configuration
+    rt_on = rt.enabled(cfg)
     # row ids ride along when tracking is on: BOTH merge paths must keep a
     # matched row's identity through its rewrite (values change, not ids)
     target = snap.df_for_adds(
-        spark, all_adds, with_lineage=True, with_row_ids=_rt_on0
+        spark, all_adds, with_lineage=True, with_row_ids=rt_on
     )
     for f in evolved_fields:
         # pre-evolution rows read the new columns as NULL
@@ -1456,23 +1315,11 @@ def merge(
     track_changes = cdf_enabled(table)
     change_parts: list[DataFrame] = []
     n_updated = n_deleted = 0
-    from .protocol import row_tracking as _rt
-
-    _cfg = table.metadata().configuration
-    _rt_on = _rt.enabled(_cfg)
-    _mat_id, _mat_cv = _rt.materialized_names(_cfg)
     # rewritten target rows keep their ids (materialized columns); inserted
     # rows get fresh ids from the new file's baseRowId (null materialized)
-    _id_sel = (
-        [
-            F.col(f"t.{_rt.ROW_ID_COL}").alias(_mat_id),
-            F.col(f"t.{_rt.ROW_CV_COL}").alias(_mat_cv),
-        ]
-        if _rt_on
-        else []
-    )
+    id_sel = rt.carried_id_columns(cfg, "t.")
     if rewrite:
-        rw = snap.df_for_adds(spark, rewrite, with_row_ids=_rt_on)
+        rw = snap.df_for_adds(spark, rewrite, with_row_ids=rt_on)
         for f in evolved_fields:
             rw = rw.withColumn(f.name, F.lit(None).cast(f.dataType))
         rw = rw.alias("t")
@@ -1504,7 +1351,7 @@ def merge(
                 spark.createDataFrame([], schema)
                 if when_not_matched_by_source_delete
                 else joined.filter(F.col("__matched").isNull()).select(
-                    *[F.col(f"t.{c}").alias(c) for c in schema.names], *_id_sel
+                    *[F.col(f"t.{c}").alias(c) for c in schema.names], *id_sel
                 )
             )
             n_deleted += n_matched
@@ -1537,7 +1384,7 @@ def merge(
                     )
                     for c in schema.names
                 ],
-                *_id_sel,
+                *id_sel,
             )
             n_updated = n_matched
             if track_changes:
@@ -1586,20 +1433,11 @@ def merge(
     if not rewrite and n_inserted == 0:
         if inserts is not None:
             inserts.unpersist()
-        return {
-            "version": table.version,
-            "numRemovedFiles": 0,
-            "numAddedFiles": 0,
-            "numTargetRowsUpdated": 0,
-            "numTargetRowsDeleted": 0,
-            "numTargetRowsInserted": 0,
-        }
+        return _no_change(
+            table, "numTargetRowsUpdated", "numTargetRowsDeleted", "numTargetRowsInserted"
+        )
 
-    change_rows = None
-    if track_changes and change_parts:
-        change_rows = change_parts[0]
-        for p in change_parts[1:]:
-            change_rows = change_rows.unionByName(p, allowMissingColumns=True)
+    change_rows = _union(change_parts, allowMissingColumns=True)
 
     evo_schema = None
     if evolved_fields:
@@ -1631,7 +1469,7 @@ def merge(
 
     try:
         new_rows = _genm.recompute(new_rows, schema)
-        return _stage_and_swap(
+        return _copy_on_write(
             spark,
             table,
             new_rows,
@@ -1649,7 +1487,7 @@ def merge(
             reads=reads,
             # evolved commits must stage under the EVOLVED mapping: the new
             # columns' physical names exist only in evo_schema
-            schema_override=evo_schema,
+            schema=evo_schema,
         )
     finally:
         if inserts is not None:

@@ -463,7 +463,6 @@ def optimize(
     from .protocol import row_tracking as _rt_mod
 
     _rt_on = _rt_mod.enabled(meta.configuration)
-    _mat_id, _mat_cv = _rt_mod.materialized_names(meta.configuration)
 
     # clustered table: a bare OPTIMIZE re-clusters on the declared columns
     # (the maintenance loop of the public clustering feature) — an explicit
@@ -538,17 +537,13 @@ def optimize(
         uris = [table.snapshot._readable(f.path) for f in files]
         n_out = max(1, math.ceil(sum(f.size for f in files) / target_file_size))
         if _rt_on:
-            from pyspark.sql import functions as F
-
             # row tracking: compaction must not change row identity — carry
             # each row's id through as materialized columns (DV-aware read,
             # so freshly-materialized deletes drop their ids with them)
             df = table.snapshot.df_for_adds(
                 spark, files, with_row_ids=True
             ).select(
-                *data_schema.names,
-                F.col(_rt_mod.ROW_ID_COL).alias(_mat_id),
-                F.col(_rt_mod.ROW_CV_COL).alias(_mat_cv),
+                *data_schema.names, *_rt_mod.carried_id_columns(meta.configuration)
             )
         elif any(f.deletion_vector for f in files):
             # DV-aware read: the rewrite drops deleted rows for good
@@ -613,19 +608,7 @@ def optimize(
     )
     for fs in plan.values():
         for f in fs:
-            txn.add_action(
-                RemoveAction(
-                    path=f.path,
-                    deletion_timestamp=now_ms,
-                    data_change=False,
-                    extended_file_metadata=True,
-                    partition_values=f.partition_values,
-                    size=f.size,
-                    deletion_vector=f.deletion_vector,
-                    base_row_id=f.base_row_id,
-                    default_row_commit_version=f.default_row_commit_version,
-                )
-            )
+            txn.add_action(RemoveAction.for_add(f, now_ms, data_change=False))
     txn.add_actions(list(adds))
     metrics["numFilesAdded"] = len(adds)
     metrics["numBytesAdded"] = sum(a.size for a in adds)
@@ -1637,19 +1620,7 @@ def restore(table, version: int) -> dict:
     for a in to_add:
         txn.add_action(a)
     for a in to_remove:
-        txn.add_action(
-            RemoveAction(
-                path=a.path,
-                deletion_timestamp=now_ms,
-                data_change=True,
-                extended_file_metadata=True,
-                partition_values=a.partition_values,
-                size=a.size,
-                deletion_vector=a.deletion_vector,
-                base_row_id=a.base_row_id,
-                default_row_commit_version=a.default_row_commit_version,
-            )
-        )
+        txn.add_action(RemoveAction.for_add(a, now_ms))
     new_version = txn.commit(
         operation="RESTORE",
         operation_parameters={"version": version},

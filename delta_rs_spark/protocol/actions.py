@@ -188,6 +188,25 @@ class RemoveAction:
         return d
 
     @classmethod
+    def for_add(
+        cls, add: AddAction, timestamp_ms: int, data_change: bool = True
+    ) -> "RemoveAction":
+        """The tombstone for an active ``add``: it repeats the add's
+        partition values, size, DV descriptor and row-tracking fields, as
+        the spec requires of a remove with extended file metadata."""
+        return cls(
+            path=add.path,
+            deletion_timestamp=timestamp_ms,
+            data_change=data_change,
+            extended_file_metadata=True,
+            partition_values=add.partition_values,
+            size=add.size,
+            deletion_vector=add.deletion_vector,
+            base_row_id=add.base_row_id,
+            default_row_commit_version=add.default_row_commit_version,
+        )
+
+    @classmethod
     def from_json_dict(cls, d: dict[str, Any]) -> "RemoveAction":
         dv = d.get("deletionVector")
         if dv is not None:

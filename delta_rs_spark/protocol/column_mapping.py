@@ -238,17 +238,6 @@ def stats_to_logical(stats: Optional[dict], schema: T.StructType) -> Optional[di
     return out
 
 
-def translate_names(
-    names: Sequence[str] | None, schema: T.StructType
-) -> Optional[list[str]]:
-    """Translate top-level logical column names → physical (for partition
-    filters and stats-skipping predicates compiled against log entries)."""
-    if names is None:
-        return None
-    mapping = top_level_physical(schema)
-    return [mapping.get(n, n) for n in names]
-
-
 # ---------------------------------------------------------------------------
 # rename / drop (metadata-only DDL)
 # ---------------------------------------------------------------------------
@@ -345,31 +334,3 @@ def max_field_id(schema: T.StructType) -> int:
 
     walk(schema)
     return best
-
-
-def validate_mapped_schema(schema: T.StructType) -> None:
-    """Every field must carry an id and a physical name; ids unique."""
-    seen: dict[int, str] = {}
-
-    def walk(dt: T.DataType, prefix: str) -> None:
-        if isinstance(dt, T.StructType):
-            for f in dt.fields:
-                meta = f.metadata or {}
-                if ID_META not in meta or PHYS_META not in meta:
-                    raise ColumnMappingError(
-                        f"field {prefix}{f.name} missing column-mapping metadata"
-                    )
-                fid = int(meta[ID_META])
-                if fid in seen:
-                    raise ColumnMappingError(
-                        f"duplicate column id {fid} ({seen[fid]} and {prefix}{f.name})"
-                    )
-                seen[fid] = prefix + f.name
-                walk(f.dataType, prefix + f.name + ".")
-        elif isinstance(dt, T.ArrayType):
-            walk(dt.elementType, prefix)
-        elif isinstance(dt, T.MapType):
-            walk(dt.keyType, prefix)
-            walk(dt.valueType, prefix)
-
-    walk(schema, "")

@@ -20,10 +20,9 @@ so two concurrent writers never hand out overlapping ids (the loser of the
 version race re-reads the winner's mark before retrying).
 
 The reference (delta-rs v0) predates the feature; implemented from the
-public Delta protocol spec. Copy-on-write DELETE/UPDATE/MERGE/replaceWhere
-and OPTIMIZE all preserve ids; inserted rows get fresh ids. Documented
-deviation: a merge-on-read MERGE writes its *updated* row versions as new
-files with fresh ids (the DV'd originals' ids are not carried over).
+public Delta protocol spec. DELETE/UPDATE/MERGE (copy-on-write and
+merge-on-read), replaceWhere and OPTIMIZE all preserve ids through
+``carried_id_columns``; inserted rows get fresh ids.
 """
 
 from __future__ import annotations
@@ -64,6 +63,23 @@ def fresh_materialized_names() -> dict[str, str]:
 def materialized_names(configuration: Optional[dict]) -> tuple[Optional[str], Optional[str]]:
     cfg = configuration or {}
     return cfg.get(MAT_ROW_ID_KEY), cfg.get(MAT_RCV_KEY)
+
+
+def carried_id_columns(configuration: Optional[dict], prefix: str = "") -> list:
+    """Columns that write each row's ``_row_id`` / ``_row_commit_version``
+    into the materialized columns, so a rewritten row keeps its identity
+    (select them next to the data columns of a frame read with
+    ``with_row_ids=True``; ``prefix`` qualifies them, e.g. ``"t."``).
+    Empty when row tracking is off."""
+    if not enabled(configuration):
+        return []
+    from pyspark.sql import functions as F
+
+    mat_id, mat_cv = materialized_names(configuration)
+    return [
+        F.col(prefix + ROW_ID_COL).alias(mat_id),
+        F.col(prefix + ROW_CV_COL).alias(mat_cv),
+    ]
 
 
 def high_water_mark(state) -> int:

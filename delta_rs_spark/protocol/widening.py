@@ -26,7 +26,6 @@ latest type change (its physical schema may be narrow); compacting the table
 
 from __future__ import annotations
 
-import json
 from typing import Any
 
 from pyspark.sql import types as T
@@ -317,13 +316,6 @@ def _pa_simple(pa_type) -> str | None:
     if pa.types.is_decimal(pa_type):
         return f"decimal({pa_type.precision},{pa_type.scale})"
     return None
-
-
-def to_json_changes(schema_string: str) -> str:
-    """Debug helper: the recorded changes of a schema-string, as JSON."""
-    from .schema import schema_string_to_spark
-
-    return json.dumps(type_changes(schema_string_to_spark(schema_string)))
 
 
 def restamp_type_changes(meta_action, old_version: int, new_version: int) -> bool:

@@ -66,11 +66,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.repartition(target)
     per_session[key] = df
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for spark.sql queries."""
-    for name in TABLE_NAMES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            load_table(spark, sf_dir, name).createOrReplaceTempView(name)

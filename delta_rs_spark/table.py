@@ -1195,7 +1195,7 @@ class DeltaTable:
             spark, self, starting_version=starting_version, ending_version=ending_version
         )
 
-    # ---- copy-on-write DML (implemented in dml.py) ---------------------------
+    # ---- DML (implemented in dml.py) ---------------------------------------
     def delete(self, spark: SparkSession, predicate: Optional[str] = None) -> dict:
         """DELETE rows matching ``predicate``; with no predicate, delete
         everything metadata-only (tombstone every file, zero data I/O)."""

@@ -791,19 +791,7 @@ def write_deltalake(
                 files=[a.path for a in removals], whole_table=True
             )
         for old in removals:
-            txn.add_action(
-                RemoveAction(
-                    path=old.path,
-                    deletion_timestamp=now_ms,
-                    data_change=True,
-                    extended_file_metadata=True,
-                    partition_values=old.partition_values,
-                    size=old.size,
-                    deletion_vector=old.deletion_vector,
-                    base_row_id=old.base_row_id,
-                    default_row_commit_version=old.default_row_commit_version,
-                )
-            )
+            txn.add_action(RemoveAction.for_add(old, now_ms))
     txn.add_actions(list(adds))
     txn.add_actions(list(extra_actions or []))
     if read_domains:
@@ -1076,12 +1064,6 @@ def _list_parquet_files(root: str) -> list[str]:
     return out
 
 
-def _remove_dir_tree(root: str) -> None:
-    import shutil
-
-    shutil.rmtree(root, ignore_errors=True)
-
-
 # ---- footer stats (metadata-only, distributed) ------------------------------
 
 def _collect_footer_stats(
@@ -1317,9 +1299,9 @@ def _replace_where(
 
     from .dml import (
         _candidate_adds,
+        _copy_on_write,
         _files_with_matches,
         _predicate_reads,
-        _stage_and_swap,
     )
 
     cond = F.coalesce(F.expr(predicate), F.lit(False))
@@ -1341,24 +1323,16 @@ def _replace_where(
     from .protocol import row_tracking as rt
 
     rt_cfg = table.metadata().configuration
-    rt_on = rt.enabled(rt_cfg)
     candidates = _candidate_adds(table, predicate)
     matched, n_replaced = _files_with_matches(spark, table, candidates, cond)
-    old = table._snapshot.df_for_adds(spark, matched, with_row_ids=rt_on)
-    survivors = old.filter(~cond)
+    old = table._snapshot.df_for_adds(
+        spark, matched, with_row_ids=rt.enabled(rt_cfg)
+    )
     table_cols = list(table.schema().names)
-    if rt_on:
-        # surviving rows keep their ids; the incoming replacement rows get
-        # fresh ids off the new file's baseRowId (null materialized columns)
-        mat_id, mat_cv = rt.materialized_names(rt_cfg)
-        survivors = survivors.withColumnRenamed(
-            rt.ROW_ID_COL, mat_id
-        ).withColumnRenamed(rt.ROW_CV_COL, mat_cv)
-        new_rows = survivors.unionByName(
-            df.select(*table_cols), allowMissingColumns=True
-        )
-    else:
-        new_rows = survivors.unionByName(df.select(*survivors.columns))
+    # surviving rows keep their ids; the incoming replacement rows get
+    # fresh ids off the new file's baseRowId (null materialized columns)
+    survivors = old.filter(~cond).select(*table_cols, *rt.carried_id_columns(rt_cfg))
+    new_rows = survivors.unionByName(df.select(*table_cols), allowMissingColumns=True)
 
     change_rows = None
     from .cdf import CHANGE_TYPE_COL, cdf_enabled
@@ -1378,7 +1352,7 @@ def _replace_where(
         )
 
     try:
-        _stage_and_swap(
+        _copy_on_write(
             spark,
             table,
             new_rows,

@@ -639,6 +639,49 @@ def test_post_enable_writes_carry_parquet_field_ids(spark, tmp_path, events):
         assert md.get(b"PARQUET:field_id") == expect[name], name
 
 
+def test_merge_on_read_writes_carry_parquet_field_ids(spark, tmp_path, events):
+    """Merge-on-read UPDATE and MERGE write their updated and inserted rows
+    as new files; those carry PARQUET:field_id like the copy-on-write
+    rewrites do."""
+    import pyarrow.parquet as pq
+
+    uri, t = _dv_table(spark, tmp_path, events)
+    t.enable_uniform()
+    t.update()
+    sj, _ = ub.iceberg_schema(t.schema())
+    expect = {f["name"]: str(f["id"]).encode() for f in sj["fields"]}
+
+    def assert_new_files_carry_ids(before):
+        t.update()
+        new = [a for a in t.add_actions() if a.path not in before]
+        assert new
+        for a in new:
+            s = pq.read_schema(os.path.join(uri, a.path))
+            for name in s.names:
+                md = dict(s.field(name).metadata or {})
+                assert md.get(b"PARQUET:field_id") == expect[name], (a.path, name)
+
+    before = {a.path for a in t.add_actions()}
+    res = t.update_where(spark, "r_regionkey = 1", {"r_name": "'x'"})
+    assert res["numDeletionVectorsAdded"] == 1  # really merge-on-read
+    assert_new_files_carry_ids(before)
+
+    before = {a.path for a in t.add_actions()}
+    src = (
+        events.filter("r_regionkey IN (2, 3)")
+        .withColumn("r_name", F.lit("y"))
+        .unionByName(
+            events.filter("r_regionkey = 0").withColumn(
+                "r_regionkey", F.col("r_regionkey") + 9
+            )
+        )
+    )
+    res = t.merge(spark, src, "t.r_regionkey = s.r_regionkey")
+    assert res["numTargetRowsUpdated"] == 2 and res["numTargetRowsInserted"] == 1
+    assert res["numDeletionVectorsAdded"] == 1
+    assert_new_files_carry_ids(before)
+
+
 def _dv_table(spark, tmp_path, events):
     uri = str(tmp_path / "t")
     write_deltalake(
